@@ -154,12 +154,12 @@ def cmd_search(args) -> int:
     for r in rows:
         d = r.asDict()
         print(json.dumps(d, default=str, sort_keys=True))
+    # count and facets come from the one aggregate the page uses
     if args.count:
-        n = result.filtered.count()
-        print(json.dumps({"count": n}))
+        print(json.dumps({"count": result.facets.count}))
     if args.facets:
-        for name, fdf in result.facets.items():
-            vals = [v.asDict() for v in fdf.collect()]
+        for name, pairs in result.facets.columns.items():
+            vals = [{"value": v, "count": n} for v, n in pairs]
             print(json.dumps({"facet": name, "values": vals}, default=str))
     return 0
 

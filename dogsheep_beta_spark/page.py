@@ -3,19 +3,21 @@
 ``templates/beta.html``), minus the HTTP server by design (SURVEY
 §7.0).
 
-``page_context`` runs ONE compiled request (results + count + facets
-off a single filtered set — collapsing the reference's dual execution
-path, __init__.py:85-86), hydrates and renders the ≤100 result rows,
-and builds the template context the reference hands to beta.html:
-``q / count / results / facets / hiddens / sorted_by /
-other_sort_orders`` (__init__.py:94-108).  ``render_page`` renders the
+``page_context`` runs ONE compiled request off a single filtered set
+(collapsing the reference's dual execution path, __init__.py:85-86):
+the top-k results, then the count and all four facets from ONE
+grouping-sets aggregate, collected inside ``build_page_facets``.  It
+hydrates and renders the ≤100 result rows, and builds the template
+context the reference hands to beta.html: ``q / count / results /
+facets / hiddens / sorted_by / other_sort_orders``
+(__init__.py:94-108).  ``render_page`` renders the
 beta.html structure (search form with hidden-field preservation,
 facet sidebar with toggle_url/selected, sort links, intcomma'd count
 — templates/beta.html:41-89) as a standalone HTML document.
 
-Everything here is presentation over collected rows and ≤30-row facet
-outputs: plain driver-side Python, zero Spark jobs beyond the request
-plan itself.  The reference's golden page assertions
+Everything else here is presentation over collected rows and ≤30-value
+facet lists: plain driver-side Python, zero Spark jobs beyond the
+request plan itself.  The reference's golden page assertions
 (reference tests/test_plugin.py:45-108, 119-230) are ported against
 this output in tests/test_page.py.
 """
@@ -139,28 +141,29 @@ def toggle_url(column: str, value: str, selected: bool, args: dict, q: str) -> s
     return "?" + urlencode(pairs)
 
 
-def build_page_facets(facet_dfs: dict, args: dict, q: str) -> list[dict]:
+def build_page_facets(res, args: dict, q: str) -> list[dict]:
     """The four facet blocks in reference order (type, category,
     is_public, timestamp date — __init__.py:202-203), each value with
     label / count / selected / toggle_url.
 
+    ``res`` is the request's ``QueryResult``: reading ``res.facets``
+    here runs its one count + facets aggregate, so this call carries
+    the request's whole aggregate cost and the caller reads the count
+    from the same memoized result.
+
     Labels: ``category`` is FK-expanded to its dimension name (C4 —
     Datasette renders ``created``, not ``1``; golden test_plugin.py:70);
     the date facet labels/filters as ``YYYY-MM-DD`` under the
-    ``timestamp__date`` arg.  NULL facet values are excluded, matching
-    Datasette's ColumnFacet/DateFacet."""
+    ``timestamp__date`` arg.  NULL facet values are excluded before the
+    top-k cut, matching Datasette's ColumnFacet/DateFacet."""
     cat_names = {c["id"]: c["name"] for c in CATEGORIES}
     out = []
-    for name in ("type", "category", "is_public", "timestamp"):
+    for name, pairs in res.facets.columns.items():
         results = []
-        for row in facet_dfs[name].collect():
-            value = row["value"]
-            if value is None:
-                continue
+        for value, count in pairs:
             if name == "timestamp":
                 column = "timestamp__date"
-                sval = value.isoformat() if hasattr(value, "isoformat") else str(value)
-                label = sval
+                sval = label = value.isoformat()
             else:
                 column = name
                 sval = str(value)
@@ -170,7 +173,7 @@ def build_page_facets(facet_dfs: dict, args: dict, q: str) -> list[dict]:
                 {
                     "value": sval,
                     "label": label,
-                    "count": row["count"],
+                    "count": count,
                     "selected": selected,
                     "toggle_url": toggle_url(column, sval, selected, args, q),
                 }
@@ -207,10 +210,10 @@ def page_context(
 
     One compiled plan supplies results, count and all four facets from
     the SAME filtered set (the engine's fix for the reference's dual
-    search/facet execution, SURVEY §3.3); hydration is the batched
-    display_sql join (C3), rendering the per-type Jinja pass (J1).
+    search/facet execution, SURVEY §3.3); the count and the facets are
+    one aggregate; hydration is the batched display_sql join (C3),
+    rendering the per-type Jinja pass (J1).
     """
-    from dogsheep_beta_spark.operators.facets import filtered_count
     from dogsheep_beta_spark.plans.hydrate import hydrate_results
     from dogsheep_beta_spark.plans.query import QueryPlan
     from dogsheep_beta_spark.plans.search import search_query
@@ -229,8 +232,8 @@ def page_context(
     # §7.5); the context manager is the teardown.
     with search_query(index_df, fts, plan, facet_size=facet_size) as res:
         rows = [r.asDict() for r in res.results.collect()]
-        count = filtered_count(res.filtered)
-        facets = build_page_facets(res.facets, args, q)
+        facets = build_page_facets(res, args, q)
+        count = res.facets.count
     templates, display_sqls = rules_templates(rules or {})
     # q binds as the EMPTY STRING in timeline mode — the reference's
     # display_sql :q param is always present (__init__.py:123,161-168)

@@ -8,7 +8,9 @@ dataclass captures the request and ``compile_plan`` emits DataFrame plans:
     filtered = search_index.filter(...)            (B3/B4)
     scored   = filtered ⋈ bm25(match(q))           (B5/C2, search mode only)
     results  = orderBy(...).limit(k)               (F1-F3 → TakeOrderedAndProject)
-    count / facets from the SAME filtered set      (D1-D4)
+    facets   = ONE grouping-sets aggregate over the SAME filtered set:
+               the count and all four facets, collected once, on
+               first use (D1-D4)
 
 Semantics pinned by the reference:
 - no q  → timeline: ORDER BY timestamp DESC LIMIT 40 (__init__.py:8-24,120)
@@ -23,12 +25,17 @@ Semantics pinned by the reference:
 
 from __future__ import annotations
 
-from collections.abc import Mapping
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from dogsheep_beta_spark.operators.facets import (
+    DEFAULT_FACET_SIZE,
+    FacetCounts,
+    count_and_facets,
+)
 
 SEARCH_LIMIT = 100  # __init__.py:42
 TIMELINE_LIMIT = 40  # __init__.py:23
@@ -120,75 +127,41 @@ def timeline_query(search_index: DataFrame, plan: QueryPlan) -> DataFrame:
     return order_results(filtered, plan, has_rank=False)
 
 
-class LazyFacets(Mapping):
-    """Facet DataFrames built on first access (r12, guide §1.2).
-
-    ``compile_plan`` used to construct all four facet DataFrames
-    eagerly for every request; each construction is ~3 analyzed JVM
-    plans, so a request path that never renders facets (the top-k
-    search/hydration/rerank consumers) paid ~12 analysis round-trips
-    per request for plans it threw away.  Any mapping access
-    (including iteration, ``len``, truthiness, ``dict(lf)`` /
-    ``{**lf}`` unpacking, ``==`` and ``copy``) materializes the full
-    facet dict once, so facet-consuming paths see the exact previous
-    behavior.
-
-    r13 (ADVICE r12): a ``collections.abc.Mapping`` WRAPPER, not a
-    dict subclass — CPython's C fast paths (``dict(lf)``, ``{**lf}``,
-    ``lf == {...}``, ``copy.copy``, ``json.dumps``) read a dict
-    subclass's internal storage directly, silently yielding an empty
-    mapping before the first build; a non-dict Mapping forces every
-    one of those through ``keys()``/``__getitem__`` (or an explicit
-    ``TypeError``), so no consumer idiom can observe the un-built
-    state."""
-
-    def __init__(self, builder):
-        self._builder = builder
-        self._built = False
-        self._data: dict = {}
-
-    def _ensure(self) -> None:
-        if not self._built:
-            self._built = True
-            self._data.update(self._builder())
-
-    def __getitem__(self, k):
-        self._ensure()
-        return self._data[k]
-
-    def __iter__(self):
-        self._ensure()
-        return iter(self._data)
-
-    def __len__(self):
-        self._ensure()
-        return len(self._data)
-
-    def copy(self) -> dict:
-        """Materialized plain-dict snapshot (also what ``copy.copy``
-        sees via ``__reduce__``-free protocols is not supported — use
-        this)."""
-        self._ensure()
-        return dict(self._data)
-
-
 @dataclass
 class QueryResult:
-    """All DataFrames for one request, derived from one filtered set.
+    """All outputs of one request, derived from one filtered set.
 
     When ``compile_plan(persist=True)`` built it, ``filtered`` is a
-    persisted DataFrame shared by results + count + 4 facets (+ any
-    hydration the caller adds): the filter/join subtree executes once
-    per request instead of once per consumed output (SURVEY §7.5).
+    persisted DataFrame shared by the top-k ``results`` and the page
+    aggregate ``facets`` (+ any hydration the caller adds): the
+    filter/join subtree executes once per request instead of once per
+    consumed output (SURVEY §7.5).
+
+    ``facets`` is the count + four facets of ``filtered`` from ONE
+    grouping-sets aggregate (``operators.facets.count_and_facets``).
+    It runs on first access and is memoized, so a request path that
+    never renders facets (the top-k search/hydration/rerank consumers)
+    pays neither the plan nor the job, and a page that reads both the
+    count and the facets pays one aggregate.
+
     ``unpersist()`` is the teardown hook — idempotent, safe to call
     whether or not the request path persisted anything; the class is
     also a context manager so request handlers can ``with`` it.
     """
 
     results: DataFrame
-    filtered: DataFrame  # for count
-    facets: dict[str, DataFrame] = field(default_factory=dict)
+    filtered: DataFrame
+    facet_size: int = DEFAULT_FACET_SIZE
     persisted: bool = False
+    _facets: FacetCounts | None = field(default=None, init=False, repr=False)
+
+    @property
+    def facets(self) -> FacetCounts:
+        # not functools.cached_property: on Python < 3.12 it holds one
+        # lock per class, which would serialize concurrent requests
+        if self._facets is None:
+            self._facets = count_and_facets(self.filtered, self.facet_size)
+        return self._facets
 
     def unpersist(self) -> None:
         if self.persisted:
@@ -207,11 +180,11 @@ def compile_plan(
     search_index: DataFrame,
     plan: QueryPlan,
     scored: DataFrame | None = None,
-    facet_size: int = 30,
+    facet_size: int = DEFAULT_FACET_SIZE,
     persist: bool = True,
 ) -> QueryResult:
-    """Compile a full request: results + count + 4 facets off one
-    filtered set (collapsing the reference's dual execution path,
+    """Compile a full request: results + the count/facets aggregate off
+    one filtered set (collapsing the reference's dual execution path,
     SURVEY §3.3).
 
     ``scored`` is the (type, key, rank) DataFrame from the FTS layer for
@@ -228,29 +201,15 @@ def compile_plan(
     top-k limit pushdown against the raw scan and skip the cache
     bookkeeping.  Teardown: ``QueryResult.unpersist()``.
     """
-    from dogsheep_beta_spark.operators import facets as facet_ops
-
     filtered = apply_filters(search_index, plan)
     if scored is not None:
         # C2 — attach relevance by joining scored docs back on the pk.
         filtered = filtered.join(scored, on=["type", "key"], how="inner")
     if persist:
         filtered = filtered.persist(StorageLevel.MEMORY_AND_DISK)
-    results = order_results(filtered, plan, has_rank=scored is not None)
-
-    def _build_facets():
-        d = {
-            c: facet_ops.column_facet(filtered, c, facet_size)
-            for c in facet_ops.FACET_COLUMNS
-        }
-        d["timestamp"] = facet_ops.date_facet(
-            filtered, "timestamp", facet_size
-        )
-        return d
-
     return QueryResult(
-        results=results,
+        results=order_results(filtered, plan, has_rank=scored is not None),
         filtered=filtered,
-        facets=LazyFacets(_build_facets),
+        facet_size=facet_size,
         persisted=persist,
     )

@@ -77,9 +77,8 @@ def test_full_request_lifecycle(spark):
     # count + facets off the SAME filtered set
     count = facet_ops.filtered_count(res.filtered)
     assert count == 3 and intcomma(count) == "3"
-    type_facet = {
-        r["value"]: r["count"] for r in res.facets["type"].collect()
-    }
+    assert res.facets.count == count
+    type_facet = dict(res.facets.columns["type"])
     assert type_facet == {"emails.db/emails": 2, "commits.db/commits": 1}
 
     # hydration: one batched query per type, not per row (C3)

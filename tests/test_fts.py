@@ -232,7 +232,7 @@ def test_search_with_filters_and_sort(plugin_index, fts):
     ts = [r["timestamp"] for r in res.results.collect()]
     assert ts == sorted(ts)
     # facets computed on the same filtered (matched) set
-    type_facet = {r["value"]: r["count"] for r in res.facets["type"].collect()}
+    type_facet = dict(res.facets.columns["type"])
     assert type_facet == {"emails.db/emails": 2, "github.db/commits": 1}
 
 

@@ -364,6 +364,41 @@ def test_search_order_for_timeline(page_ctx, sort, expected):
     assert f">{other}</a>" in html
 
 
+@pytest.mark.parametrize(
+    "args",
+    [{}, {"q": "things"}, {"q": "things", "type": "emails.db/emails"}],
+)
+def test_count_and_facets_take_at_most_two_jobs(page_ctx, monkeypatch, args):
+    """Job-count guard: a page's count and four facets are ONE
+    aggregate, run inside build_page_facets — at most 2 Spark jobs
+    (AQE's shuffle-map stage + the result stage) — and no count job
+    follows it before hydration."""
+    import dogsheep_beta_spark.page as page
+    import dogsheep_beta_spark.plans.hydrate as hydrate
+
+    spark, idx, fts = page_ctx
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = {}
+    real_build, real_hydrate = page.build_page_facets, hydrate.hydrate_results
+
+    def build(*a, **k):
+        start = scheduler.nextJobId()
+        out = real_build(*a, **k)
+        jobs["facets"], jobs["end"] = scheduler.nextJobId() - start, scheduler.nextJobId()
+        return out
+
+    def hydrate_results(*a, **k):
+        jobs["after"] = scheduler.nextJobId() - jobs["end"]
+        return real_hydrate(*a, **k)
+
+    monkeypatch.setattr(page, "build_page_facets", build)
+    monkeypatch.setattr(hydrate, "hydrate_results", hydrate_results)
+    ctx = page.page_context(spark, idx, fts, args, CONFIG)
+    assert 1 <= jobs["facets"] <= 2
+    assert jobs["after"] == 0
+    assert ctx["count"] == sum(v["count"] for v in ctx["facets"][0]["results"])
+
+
 def test_selected_facet_toggle_removes_filter(page_ctx):
     """A selected facet value renders with the ✖ toggle whose URL drops
     the filter (templates/beta.html:67-72, __init__.py:246-257), and

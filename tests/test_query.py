@@ -1,5 +1,7 @@
 """Timeline / filter / facet semantics (SURVEY §2 B3-B4, D1-D4, F2-F4)."""
 
+from pyspark.sql import functions as F
+
 from dogsheep_beta_spark.plans.query import QueryPlan, timeline_query, compile_plan
 from dogsheep_beta_spark.operators import facets as facet_ops
 from dogsheep_beta_spark.schema import categories_df
@@ -60,23 +62,26 @@ def test_sort_overrides(plugin_index):
 def test_count_and_facets(plugin_index, spark):
     res = compile_plan(plugin_index, QueryPlan())
     assert facet_ops.filtered_count(res.filtered) == 4
+    assert res.facets.count == 4
 
-    type_facet = {r["value"]: r["count"] for r in res.facets["type"].collect()}
+    type_facet = dict(res.facets.columns["type"])
     assert type_facet == {"emails.db/emails": 2, "github.db/commits": 2}
 
-    is_public_facet = {r["value"]: r["count"] for r in res.facets["is_public"].collect()}
+    is_public_facet = dict(res.facets.columns["is_public"])
     assert is_public_facet == {0: 2, 1: 2}
 
-    date_facet = {str(r["value"]): r["count"] for r in res.facets["timestamp"].collect()}
+    date_facet = {str(v): n for v, n in res.facets.columns["timestamp"]}
     assert date_facet == {"2020-08-01": 2, "2020-08-02": 2}
 
 
 def test_category_facet_labels(plugin_index, spark):
     # C4: FK label expansion via broadcast join — facet shows "created".
     res = compile_plan(plugin_index, QueryPlan())
-    labeled = facet_ops.facet_with_labels(res.facets["category"], categories_df(spark))
+    facet = facet_ops.column_facet(res.filtered, "category")
+    labeled = facet_ops.facet_with_labels(facet, categories_df(spark))
     rows = {r["label"]: r["count"] for r in labeled.collect() if r["value"] is not None}
     assert rows == {"created": 2}
+    assert res.facets.columns["category"] == [(1, 2)]
 
 
 def test_search_and_facets_share_one_filtered_set(plugin_index):
@@ -105,7 +110,7 @@ def test_search_and_facets_share_one_filtered_set(plugin_index):
         (r["type"], r["key"]) for r in res.filtered.select("type", "key").collect()
     }
     assert result_keys == filtered_keys  # same doc set feeds both
-    type_facet = {r["value"]: r["count"] for r in res.facets["type"].collect()}
+    type_facet = dict(res.facets.columns["type"])
     assert sum(type_facet.values()) == len(filtered_keys)
     assert type_facet == {"emails.db/emails": 1}
 
@@ -134,50 +139,109 @@ def test_non_numeric_facet_args_match_nothing(spark, plugin_index):
     assert apply_filters(plugin_index, QueryPlan(category="1.5")).count() == 0
 
 
-def test_facets_built_lazily_and_exactly_once(plugin_index):
-    """r12 request-path optimization contract (plans/query.py:LazyFacets):
-    a request that never consumes facets must not pay their plan
-    construction; a request that does must see the exact eager-build
-    dict, built once no matter how many accesses."""
-    from dogsheep_beta_spark.plans.query import LazyFacets, compile_plan
+def _next_job_id(spark) -> int:
+    # the DAG scheduler's id counter moves synchronously at job
+    # submission (the status tracker lags behind the listener bus)
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_facets_built_lazily_and_exactly_once(spark, plugin_index):
+    """Request-path contract (plans/query.py:QueryResult.facets): a
+    request that never consumes facets must not pay their plan or
+    job; a request that does gets the count and all four facets from
+    ONE aggregate, run once however many times it is read."""
+    from dogsheep_beta_spark.plans.query import compile_plan
 
     calls = []
+    real = facet_ops.count_and_facets
 
-    def builder():
-        calls.append(1)
-        return {"a": 1, "b": 2}
+    def counting(df, facet_size):
+        calls.append(facet_size)
+        return real(df, facet_size)
 
-    lf = LazyFacets(builder)
-    assert calls == []  # construction alone builds nothing
-    assert lf["a"] == 1 and "b" in lf and dict(lf.items()) == {"a": 1, "b": 2}
-    assert len(lf) == 2 and lf.get("missing") is None
-    assert calls == [1]  # every access path shares ONE build
+    import dogsheep_beta_spark.plans.query as query_mod
 
-    # r13 (ADVICE r12): the C fast-path idioms a dict SUBCLASS would
-    # silently answer with empty internal storage must all see the
-    # built mapping — LazyFacets is a Mapping wrapper, so dict(),
-    # {**}, ==, and copy() route through keys()/__getitem__.
-    want = {"a": 1, "b": 2}
-    for fresh_probe in (
-        lambda m: dict(m),
-        lambda m: {**m},
-        lambda m: m.copy(),
-    ):
-        fresh = LazyFacets(builder)
-        assert fresh_probe(fresh) == want
-    fresh = LazyFacets(builder)
-    assert fresh == want and LazyFacets(builder) == LazyFacets(builder)
-    assert calls[0] == 1  # (sanity: builder list still shared above)
+    query_mod.count_and_facets = counting
+    try:
+        before = _next_job_id(spark)
+        res = compile_plan(plugin_index, QueryPlan(), persist=False)
+        assert calls == []  # untouched until a consumer asks
+        assert _next_job_id(spark) == before  # compiling starts no job
+        agg = res.facets
+        assert res.facets is agg and res.facets.count == agg.count
+        assert calls == [30]  # every read shares ONE aggregate
+    finally:
+        query_mod.count_and_facets = real
 
-    # through the real request path: compile_plan's facets must stay
-    # unbuilt until consumed, then equal the eager column facets
-    from dogsheep_beta_spark.operators import facets as facet_ops
-    from dogsheep_beta_spark.plans.query import QueryPlan
-
-    res = compile_plan(plugin_index, QueryPlan(), persist=False)
-    assert isinstance(res.facets, LazyFacets)
-    assert not res.facets._built  # untouched until a consumer asks
-    got = {r["value"]: r["count"] for r in res.facets["type"].collect()}
+    # ... and the facets equal the eager single-column facets
+    assert isinstance(agg, facet_ops.FacetCounts)
     want_df = facet_ops.column_facet(res.filtered, "type", 30)
-    want = {r["value"]: r["count"] for r in want_df.collect()}
-    assert got == want and res.facets._built
+    want = [(r["value"], r["count"]) for r in want_df.collect()]
+    assert agg.columns["type"] == want
+    assert agg.count == facet_ops.filtered_count(res.filtered)
+    assert list(agg.columns) == [*facet_ops.FACET_COLUMNS, "timestamp"]
+
+
+def _without_null(facet_df) -> list:
+    return [(r["value"], r["count"]) for r in facet_df.collect() if r["value"] is not None]
+
+
+def test_null_facet_values_stay_outside_the_top_k(spark):
+    from types import SimpleNamespace
+
+    from dogsheep_beta_spark.page import build_page_facets
+
+    """Datasette's ColumnFacet filters ``col is not null`` BEFORE its
+    LIMIT: a NULL group must not take one of the facet_size slots, even
+    when it is the largest group."""
+    size = 5
+    rows = [(f"t{i:02d}", i, "2020-01-01") for i in range(8)]
+    rows += [(None, None, None)] * 20  # the biggest group is NULL
+    df = spark.createDataFrame(rows, "type string, category int, timestamp string")
+    df = df.withColumn("is_public", F.lit(None).cast("int"))
+    agg = facet_ops.count_and_facets(df, size)
+    want = _without_null(facet_ops.column_facet(df, "type", 100))[:size]
+    assert len(agg.columns["type"]) == size
+    assert agg.columns["type"] == want
+    assert agg.columns["is_public"] == []  # all-NULL column: no values
+    assert agg.count == 28
+    # ... and the page shows exactly facet_size values
+    blocks = build_page_facets(SimpleNamespace(facets=agg), {}, "")
+    assert [len(b["results"]) for b in blocks] == [size, size, 0, 1]
+
+
+def test_grouping_id_decode_matches_single_facets(spark):
+    """Pin the grouping_id decode of count_and_facets: rows with NULL in
+    every facet column, NULL and unparseable timestamps, and more than
+    facet_size distinct days with tied counts.  The count must equal
+    df.count() and each facet must equal column_facet/date_facet minus
+    NULL — a NULL value is never read as a rolled-up total."""
+    import datetime
+
+    rows = []
+    for d in range(40):  # 40 days: counts 1..3, many ties across days
+        day = datetime.date(2020, 1, 1) + datetime.timedelta(days=d)
+        sep = "T" if d % 2 else " "
+        for k in range(1 + d % 3):
+            rows.append((f"db/r{d % 7}", d % 4, k % 2, f"{day}{sep}0{k}:00:00"))
+    rows += [(None, None, None, None)] * 3  # NULL in every facet column
+    rows += [("db/r1", None, 1, "not a date"), (None, 2, None, "")]
+    df = spark.createDataFrame(
+        rows, "type string, category int, is_public int, timestamp string"
+    )
+    agg = facet_ops.count_and_facets(df)
+    assert agg.count == df.count() == len(rows)
+    for c in facet_ops.FACET_COLUMNS:
+        want = _without_null(facet_ops.column_facet(df, c, 100))
+        assert agg.columns[c] == want[: facet_ops.DEFAULT_FACET_SIZE], c
+    # date_facet under ANSI casts raises on unparseable text; without
+    # ANSI its to_date yields NULL, the SQLite date() semantics that
+    # count_and_facets reproduces with try_to_date
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        want = _without_null(facet_ops.date_facet(df, "timestamp", 100))
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert len(want) == 40
+    assert agg.columns["timestamp"] == want[: facet_ops.DEFAULT_FACET_SIZE]
