@@ -1053,10 +1053,6 @@ def connected_components(
         )
         n_chg = new.where(F.col("__chg") == 1).count()
         done = n_chg == 0
-        if __import__("os").environ.get("DBS_PROFILE_CC"):
-            import sys as _sys
-
-            print(f"# ccprof round changed={n_chg}", file=_sys.stderr)
         labels.unpersist()  # round 1: the persisted seed labels
         release_local_checkpoint(labels)  # rounds 2+: checkpoint blocks
         labels = new.drop("__chg")

@@ -25,6 +25,7 @@ Semantics pinned by the reference:
 
 from __future__ import annotations
 
+import datetime
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -94,6 +95,19 @@ def apply_filters(df: DataFrame, plan: QueryPlan) -> DataFrame:
             return F.col(col) == int(fv)
         return F.col(col) == fv
 
+    def date_eq(value):
+        # SQLite compares date(timestamp) TEXT with the arg text, so an
+        # unparseable timestamp (NULL date) and an arg that is not a
+        # canonical YYYY-MM-DD both match nothing — a normal 0-result
+        # page, not an ANSI cast error (try_to_date, as the date facet)
+        try:
+            day = datetime.date.fromisoformat(value)
+        except ValueError:
+            return F.lit(False)
+        if day.isoformat() != value:  # 20240101, 2024-W01-1, ...
+            return F.lit(False)
+        return F.try_to_date(F.col("timestamp")) == F.lit(day)
+
     if plan.type is not None:
         df = df.filter(F.col("type") == str(plan.type))
     if plan.category is not None:
@@ -101,7 +115,7 @@ def apply_filters(df: DataFrame, plan: QueryPlan) -> DataFrame:
     if plan.is_public is not None:
         df = df.filter(int_eq("is_public", plan.is_public))
     if plan.date is not None:
-        df = df.filter(F.to_date(F.col("timestamp")) == F.lit(str(plan.date)).cast("date"))
+        df = df.filter(date_eq(str(plan.date)))
     return df
 
 

@@ -27,13 +27,10 @@ from dogsheep_beta_spark.plans.match import (
 from dogsheep_beta_spark.plans.query import QueryPlan, QueryResult, compile_plan
 
 
-def scored_docs(fts: FtsIndex, q: str, type_filter: str | None = None) -> DataFrame:
-    """(type, key, rank) for every doc matching q (two-phase compile).
-
-    ``type_filter`` pushes a ``?type=`` equality below the scoring
-    aggregation (hits of other sources never reach the per-doc sum);
-    BM25 stats remain corpus-global so ranks are unchanged — see
-    functions/bm25.score_phrase_hits."""
+def _compile_q(fts: FtsIndex, q: str):
+    """(docset, hits) for q: analyze with the index's own spec, parse
+    the MATCH grammar, fall back to the escaped literal on a syntax
+    error (B6/H8), compile over the postings."""
 
     def analyze(s: str) -> list[str]:
         return analyze_py(s, fts.mode, fts.stem)
@@ -44,8 +41,18 @@ def scored_docs(fts: FtsIndex, q: str, type_filter: str | None = None) -> DataFr
             word_chars=mode_tokenchars(fts.mode),
         )
     except ParseError:
-        ast = escape_match(q, analyze)  # B6/H8 fallback
-    docset, hits = compile_match(ast, fts)
+        ast = escape_match(q, analyze)
+    return compile_match(ast, fts)
+
+
+def scored_docs(fts: FtsIndex, q: str, type_filter: str | None = None) -> DataFrame:
+    """(type, key, rank) for every doc matching q (two-phase compile).
+
+    ``type_filter`` pushes a ``?type=`` equality below the scoring
+    aggregation (hits of other sources never reach the per-doc sum);
+    BM25 stats remain corpus-global so ranks are unchanged — see
+    functions/bm25.score_phrase_hits."""
+    docset, hits = _compile_q(fts, q)
     if type_filter is not None:
         docset = docset.filter(F.col("type") == type_filter)
     scored = score_phrase_hits(
@@ -66,19 +73,7 @@ def matching_docs(fts: FtsIndex, q: str) -> DataFrame:
     BM25 scoring.  Count/facet-only requests (D1/D2 under search) go
     through this: the per-doc rank aggregation is pure waste when no
     output orders by relevance."""
-
-    def analyze(s: str) -> list[str]:
-        return analyze_py(s, fts.mode, fts.stem)
-
-    try:
-        ast = parse_match(
-            q, analyze, columns=fts.fields,
-            word_chars=mode_tokenchars(fts.mode),
-        )
-    except ParseError:
-        ast = escape_match(q, analyze)
-    docset, _ = compile_match(ast, fts)
-    return docset
+    return _compile_q(fts, q)[0]
 
 
 def search_query(
@@ -89,11 +84,7 @@ def search_query(
     persist: bool = True,
 ) -> QueryResult:
     """Compile one search request end-to-end (results/count/facets)."""
-    if not plan.is_search:
-        return compile_plan(
-            index_df, plan, scored=None, facet_size=facet_size, persist=persist
-        )
-    scored = scored_docs(fts, plan.q, type_filter=plan.type)
+    scored = scored_docs(fts, plan.q, type_filter=plan.type) if plan.is_search else None
     return compile_plan(
         index_df, plan, scored=scored, facet_size=facet_size, persist=persist
     )

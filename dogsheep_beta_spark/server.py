@@ -112,12 +112,11 @@ def _resolve_parts(path: str) -> list[tuple[str, str | None]]:
     ``(resolved_dir, partition_dirname_or_None)`` pairs — the reader
     never keeps a path that traverses a mutable symlink.
 
-    Monolithic stream layout: ``path`` is a symlink; one entry, its
-    resolved version dir.  Partitioned layout: one entry per
-    ``col=value`` child — symlink children resolve to their version
-    dirs, legacy plain-dir children (batch-written partitions the
-    stream has not touched) pass through as-is.  Legacy monolithic
-    plain dir: the dir itself.
+    One entry per ``col=value`` child of the partition-by-type stream
+    layout — symlink children resolve to their version dirs, legacy
+    plain-dir children (batch-written partitions the stream has not
+    touched) pass through as-is.  A plain unpartitioned dir: the dir
+    itself.
 
     Round 7 (VERDICT r6 #1): reading ``spark.read.parquet(live_dir)``
     listed files THROUGH the ``type=`` symlinks, so a publish between
@@ -128,8 +127,6 @@ def _resolve_parts(path: str) -> list[tuple[str, str | None]]:
     plan built on them cannot tear; pins (pin_generation) keep them
     alive past further publishes until the request releases."""
     base = os.path.abspath(path.rstrip("/"))
-    if os.path.islink(base):
-        return [(os.path.realpath(base), None)]
     parts: list[tuple[str, str | None]] = []
     try:
         for e in sorted(os.listdir(base)):
@@ -201,22 +198,20 @@ def _read_parts(spark, parts):
 
 def load_live_snapshot(spark, index_path, fts_path, mode="portable", stem=False):
     """(index_df, FtsIndex) pinned to the CURRENT committed generation
-    of a layout that a streaming merge (``merge_fts_batch``) is
+    of a layout that a streaming merge (``merge_fts_batch_scoped``) is
     actively appending to.
 
-    Each artifact publishes via atomic symlink cutover
-    (``_publish_dir``), so resolving the symlink ONCE and reading the
-    resolved version dir yields a complete generation — never a
-    half-written mixture.  A publish during the request is invisible,
-    and (round 7) the resolved dirs are PINNED (``pin_generation``)
-    until release, so no number of further publishes or compactions
-    can sweep them out from under an executing job.  Corpus scalars
-    (n_docs, avgdl) are memoized per resolved-generation key (the
-    ``_resolve_parts`` tuples): for the monolithic layout that is the
-    resolved version dir, for the partitioned layout it is every
-    partition's resolved target — so a publish in EITHER layout misses
-    the cache and recomputes, while steady-state requests pay zero
-    extra jobs.
+    Each ``type=`` partition publishes via atomic symlink cutover
+    (``_publish_dir``), so resolving each partition's symlink ONCE and
+    reading the resolved version dirs yields complete partition
+    generations — never a half-written file set.  A publish during the
+    request is invisible, and (round 7) the resolved dirs are PINNED
+    (``pin_generation``) until release, so no number of further
+    publishes or compactions can sweep them out from under an
+    executing job.  Corpus scalars (n_docs, avgdl) are memoized per
+    resolved-generation key (the ``_resolve_parts`` tuples: every
+    partition's resolved target), so any publish misses the cache and
+    recomputes, while steady-state requests pay zero extra jobs.
 
     This is the reference's trigger-maintained-FTS story
     (reference dogsheep_beta/utils.py:90: SQLite triggers keep
@@ -224,14 +219,13 @@ def load_live_snapshot(spark, index_path, fts_path, mode="portable", stem=False)
     file) made real at engine scale: writer and server share nothing
     but the published layout.
 
-    Isolation granularity follows the layout: the monolithic stream
-    layout (``incremental_fts_stream(partitioned=False)``) publishes
-    whole-artifact symlinks, so a request pins complete generations of
-    index/postings/doc_lengths.  The partitioned layout publishes
-    per-``type=`` partition symlinks; a request then gets
-    per-partition atomicity (partition A at batch N, B at N−1 for an
-    instant) — the same isolation level Hive dynamic partition
-    overwrite gives, documented at _publish_partitions."""
+    Isolation is per partition: a request that resolves mid-publish
+    can pair partition A at batch N with B at N−1, or one type's new
+    postings with its old index partition, for an instant — the level
+    Hive dynamic partition overwrite gives, documented at
+    _publish_partitions.  Whole-snapshot isolation is what the
+    object-store backend's one-record commit buys
+    (``storage/objectstore.py``)."""
     from pyspark.sql import functions as F
 
     from dogsheep_beta_spark.operators.fts_index import FtsIndex
@@ -338,7 +332,7 @@ def make_live_handler(
 ):
     """Handler that re-pins the index + FTS generation PER REQUEST —
     serve-while-indexing: docs appended by a concurrently running
-    ``merge_fts_batch`` stream become searchable on the next request,
+    ``incremental_fts_stream`` become searchable on the next request,
     no restart, and no request ever reads a partial generation (the
     symlink resolution in load_live_snapshot is the isolation
     boundary)."""

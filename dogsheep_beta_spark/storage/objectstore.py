@@ -445,13 +445,14 @@ def vacuum_objectstore(
 # ---------------------------------------------------------------------------
 #
 # The POSIX FTS maintenance publishes THREE coupled layouts (index,
-# postings, doc_lengths) via back-to-back symlink cutovers
-# ("stage-all-publish-last", incremental.py:merge_fts_batch) — correct,
-# but with a reader-visible transient between the cutovers that the
-# crash sweep must prove HEALED rather than absent.  The log protocol
-# does better for free: one record carries every table's full file
-# list, so a reader resolving one generation sees all three tables of
-# the SAME commit — the transient is not healed, it is unrepresentable.
+# postings, doc_lengths) via back-to-back per-partition symlink
+# cutovers ("stage-all-publish-last",
+# incremental.py:merge_fts_batch_scoped) — correct, but with a
+# reader-visible transient between the cutovers that the crash sweep
+# must prove HEALED rather than absent.  The log protocol does better
+# for free: one record carries every table's full file list, so a
+# reader resolving one generation sees all three tables of the SAME
+# commit — the transient is not healed, it is unrepresentable.
 
 
 def replace_tables_objectstore(
@@ -577,25 +578,20 @@ def merge_fts_batch_objectstore(
     commit_token: str | None = None,
     staging_root: str | None = None,
 ) -> bool:
-    """foreachBatch body: the object-store port of ``merge_fts_batch``
-    (streaming/incremental.py:493, the A10 incremental FTS
-    maintenance) — identical merge/delta semantics (upsert the
-    conformed batch into search_index, anti-join the touched docs out
-    of postings/doc_lengths, tokenize only the incoming docs), with
-    the three coupled outputs committed as ONE atomic multi-table
-    record instead of three back-to-back symlink cutovers.  A reader
-    can never pair new postings with stale lengths: every generation
-    is a consistent (index, postings, doc_lengths) triple by
-    construction."""
+    """foreachBatch body: incremental FTS maintenance (A10) on the
+    object-store backend.  The merge arithmetic is the POSIX path's own
+    (``upsert_batch`` + ``fts_delta`` in streaming/incremental.py);
+    only the read, stage and commit differ: each table is read whole
+    from the latest log record, and the three coupled outputs commit
+    as ONE atomic multi-table record instead of per-partition symlink
+    cutovers.  A reader can never pair new postings with stale
+    lengths: every generation is a consistent (index, postings,
+    doc_lengths) triple by construction."""
     import tempfile
 
-    from pyspark.sql import functions as F
-
-    from dogsheep_beta_spark.operators.conform import conform
-    from dogsheep_beta_spark.operators.fts_index import postings_and_lengths
-    from dogsheep_beta_spark.operators.upsert import (
-        last_writer_wins,
-        union_conformed,
+    from dogsheep_beta_spark.streaming.incremental import (
+        fts_delta,
+        upsert_batch,
     )
 
     if commit_token is not None:
@@ -603,17 +599,9 @@ def merge_fts_batch_objectstore(
         if latest is not None and commit_token in latest.get("tokens", []):
             return False  # replay of a committed batch: skip the work
 
-    incoming = conform(batch_df, type_tag).withColumn("load_seq", F.lit(1))
-    existing = read_table_objectstore(spark, store, prefix, "index")
-    if existing is not None:
-        merged = last_writer_wins(
-            union_conformed(
-                [existing.withColumn("load_seq", F.lit(0)), incoming]
-            )
-        )
-    else:
-        merged = last_writer_wins(incoming)
-
+    merged, batch_keys = upsert_batch(
+        batch_df, type_tag, read_table_objectstore(spark, store, prefix, "index")
+    )
     staging = tempfile.mkdtemp(prefix="dbs_osfts_", dir=staging_root)
     dirs = {n: os.path.join(staging, n) for n in (
         "index", "postings", "doc_lengths"
@@ -622,21 +610,14 @@ def merge_fts_batch_objectstore(
     # the stable on-disk snapshot (same discipline as the POSIX path:
     # the postings plan must not re-execute the merge join)
     merged.write.mode("overwrite").parquet(dirs["index"])
-    merged_disk = spark.read.parquet(dirs["index"])
-    batch_keys = incoming.select("type", "key").distinct()
-    touched = merged_disk.join(batch_keys, ["type", "key"], "left_semi")
-    delta_post, delta_len = postings_and_lengths(touched, mode=mode, stem=stem)
-    old_post = read_table_objectstore(spark, store, prefix, "postings")
-    old_len = read_table_objectstore(spark, store, prefix, "doc_lengths")
-    if old_post is not None and old_len is not None:
-        new_post = old_post.join(
-            batch_keys, ["type", "key"], "left_anti"
-        ).unionByName(delta_post)
-        new_len = old_len.join(
-            batch_keys, ["type", "key"], "left_anti"
-        ).unionByName(delta_len)
-    else:
-        new_post, new_len = delta_post, delta_len
+    new_post, new_len = fts_delta(
+        spark.read.parquet(dirs["index"]),
+        batch_keys,
+        read_table_objectstore(spark, store, prefix, "postings"),
+        read_table_objectstore(spark, store, prefix, "doc_lengths"),
+        mode=mode,
+        stem=stem,
+    )
     new_post.write.mode("overwrite").parquet(dirs["postings"])
     new_len.write.mode("overwrite").parquet(dirs["doc_lengths"])
     try:

@@ -9,6 +9,15 @@ semantics as the batch indexer — so a stream of updates converges to
 exactly what a batch rebuild would produce (tested in
 tests/test_streaming.py).
 
+There is ONE streamed layout: index, postings and doc_lengths are each
+``partitionBy("type")``, and a micro-batch (``merge_batch_scoped``,
+``merge_fts_batch_scoped``) or a tombstone set (``delete_fts_docs``)
+reads, stages and publishes only the type partitions it touches.  The
+merge arithmetic — ``upsert_batch`` and ``fts_delta`` — is pure
+DataFrame plan, defined once and shared with the object-store backend
+(``storage/objectstore.py``); each backend adds only its own read,
+stage and commit steps.
+
 Also provides watermarked tumbling-window facet counts over the raw
 event stream — the streaming analog of the date facet (D3).
 
@@ -29,8 +38,7 @@ commit API rebuilt on the ONE primitive S3-class stores do have —
 conditional put — as a Delta-style log protocol with optimistic
 concurrency and no lock, crash-swept by the identical injection
 machinery as this module and proven equivalent on the streamed IVF
-layout (``layout_objectstore_commit`` gate row).  The read/merge
-plans above either backend are unchanged.
+layout (``layout_objectstore_commit`` gate row).
 """
 
 from __future__ import annotations
@@ -44,22 +52,7 @@ from dogsheep_beta_spark.operators.conform import conform
 from dogsheep_beta_spark.operators.upsert import last_writer_wins, union_conformed
 
 
-def _read_existing(spark: SparkSession, path: str) -> DataFrame | None:
-    """The existing parquet at ``path``, or None iff the path does not
-    exist (genuine first batch).  Any OTHER failure — corrupt file,
-    transient FS error — must RAISE: the old code's bare ``except``
-    treated every read error as 'first batch' and then overwrote the
-    index with only the micro-batch, silently discarding all prior
-    data.  On distributed storage, replace the local existence check
-    with FileSystem.exists on the path's filesystem."""
-    import os
-
-    if not os.path.exists(path):
-        return None
-    return spark.read.parquet(path)
-
-
-def _publish_dir(src_dir: str, path: str, hidden: bool = False) -> None:
+def _publish_dir(src_dir: str | None, path: str, hidden: bool = False) -> None:
     """Atomically point ``path`` at the data in ``src_dir`` via a
     versioned-directory + symlink-pointer cutover.
 
@@ -82,7 +75,11 @@ def _publish_dir(src_dir: str, path: str, hidden: bool = False) -> None:
     (``type=X``) inside a live table root: Spark's file listing skips
     dot/underscore-prefixed entries, so the machinery stays invisible
     to partition discovery — a bare ``type=X.__v1__`` sibling would
-    otherwise be parsed as a partition named ``X.__v1__``."""
+    otherwise be parsed as a partition named ``X.__v1__``.
+
+    ``src_dir=None`` RETIRES ``path`` instead (a delete emptied the
+    partition): the pointer is unlinked, one atomic op, and the version
+    it pointed at is retained one generation like any superseded one."""
     import os
     import re
     import shutil
@@ -110,13 +107,16 @@ def _publish_dir(src_dir: str, path: str, hidden: bool = False) -> None:
         os.rename(base, os.path.join(gen_parent, f"{name}.__v{nxt}__"))
         versions.append(nxt)
         nxt += 1
-    vdir = os.path.join(gen_parent, f"{name}.__v{nxt}__")
-    os.rename(src_dir, vdir)
-
-    if os.path.lexists(ptr_tmp):
-        os.remove(ptr_tmp)
-    os.symlink(os.path.relpath(vdir, parent), ptr_tmp)
-    os.rename(ptr_tmp, base)  # atomic cutover
+    if src_dir is None:
+        if os.path.lexists(base):
+            os.remove(base)  # atomic retire
+    else:
+        vdir = os.path.join(gen_parent, f"{name}.__v{nxt}__")
+        os.rename(src_dir, vdir)
+        if os.path.lexists(ptr_tmp):
+            os.remove(ptr_tmp)
+        os.symlink(os.path.relpath(vdir, parent), ptr_tmp)
+        os.rename(ptr_tmp, base)  # atomic cutover
 
     # retain the one prior generation for in-flight readers; older
     # superseded generations are swept UNLESS a live snapshot pin
@@ -294,33 +294,59 @@ def _atomic_swap_write(df: DataFrame, path: str) -> None:
     _publish_dir(tmp, base)
 
 
-def merge_batch(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    batch_id: int,
-    index_path: str,
-    type_tag: str,
-) -> None:
-    """foreachBatch body: conform the micro-batch and upsert it into
-    the Parquet index (read → union → dedup → temp-write → swap).
-
-    MONOLITHIC-layout variant: every batch re-reads and rewrites the
-    whole index — O(index) I/O per batch, fine for a small single-type
-    index, wrong for a long-running stream at scale.  Use
-    ``merge_batch_scoped`` (partition-by-type layout, O(touched
-    partitions) per batch) for the production shape; the semantics
-    (per-pk last-writer-wins with the batch as the newer writer) are
-    identical, as is the Delta/Iceberg ``MERGE WHEN MATCHED``
-    equivalent both variants approximate on plain parquet."""
+def upsert_batch(
+    batch_df: DataFrame, type_tag: str, existing: DataFrame | None
+) -> tuple[DataFrame, DataFrame]:
+    """The upsert every index maintainer shares: conform the micro-batch
+    and merge it over ``existing`` (the stored rows it can collide
+    with; None on a first batch) by per-pk last-writer-wins, the batch
+    being the newer writer — the batch indexer's semantics, so a stream
+    converges to a rebuild.  Returns ``(merged, batch_keys)``: the
+    replacement rows and the batch's distinct ``(type, key)`` set.
+    A pure plan: each backend does its own read, stage and commit."""
     incoming = conform(batch_df, type_tag).withColumn("load_seq", F.lit(1))
-    existing = _read_existing(spark, index_path)
     if existing is not None:
         merged = last_writer_wins(
             union_conformed([existing.withColumn("load_seq", F.lit(0)), incoming])
         )
     else:  # first batch: nothing to merge yet
         merged = last_writer_wins(incoming)
-    _atomic_swap_write(merged, index_path)
+    return merged, incoming.select("type", "key").distinct()
+
+
+def fts_delta(
+    merged: DataFrame,
+    batch_keys: DataFrame,
+    old_postings: DataFrame | None,
+    old_lengths: DataFrame | None,
+    mode: str = "portable",
+    stem: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """The FTS-trigger analog (utils.py:90) as a pure plan: tokenize
+    ONLY the batch's docs as they stand in ``merged`` (post-merge rows,
+    so an update reindexes its new text), then anti-join the batch keys
+    out of the old postings and doc_lengths (None: nothing stored yet)
+    and union the new rows in.  Tokenization is O(batch); untouched
+    rows carry through unchanged.
+
+    ``merged`` should be the STAGED copy re-read from disk, so the
+    delta plans do not re-execute the merge join.  ``mode``/``stem``
+    must be the index's own analyzer spec: a default-tokenized delta
+    against a porter/tokenchars index would silently fork the term
+    dictionary."""
+    from dogsheep_beta_spark.operators.fts_index import postings_and_lengths
+
+    touched = merged.join(batch_keys, ["type", "key"], "left_semi")
+    delta_post, delta_len = postings_and_lengths(touched, mode=mode, stem=stem)
+
+    def swap(old: DataFrame | None, delta: DataFrame) -> DataFrame:
+        if old is None:
+            return delta
+        return old.join(batch_keys, ["type", "key"], "left_anti").unionByName(
+            delta
+        )
+
+    return swap(old_postings, delta_post), swap(old_lengths, delta_len)
 
 
 def _parquet_store_missing_column(path: str, column: str) -> bool:
@@ -392,31 +418,51 @@ def _read_partitioned(
 
 
 def _publish_partitions(
-    stage_dir: str, live_dir: str, col: str = "type"
+    stage_dir: str, live_dir: str, col: str = "type", retire=()
 ) -> None:
     """Publish every ``type=…`` partition dir the staging write
     produced onto the live layout, one atomic symlink cutover per
     partition (hidden version dirs — invisible to Spark's listing).
     Partitions NOT present in the stage are never touched: their files
-    stay byte-identical.  Isolation is per-partition (a reader racing
-    the publish can see partition A at batch N and partition B at
-    N−1 for an instant) — the same level Hive dynamic partition
-    overwrite and per-partition commits give; whole-table snapshot
-    isolation is what a transactional format (Delta/Iceberg) buys."""
+    stay byte-identical — except those whose value is in ``retire``
+    (values the staging plan covered, so an absent partition means it
+    now holds no rows), which are retired.  Isolation is per-partition
+    (a reader racing the publish can see partition A at batch N and
+    partition B at N−1 for an instant) — the same level Hive dynamic
+    partition overwrite and per-partition commits give; whole-table
+    snapshot isolation is what a transactional format (Delta/Iceberg)
+    buys."""
     import os
     import shutil
+    from urllib.parse import unquote
 
     os.makedirs(live_dir, exist_ok=True)
     pfx = col + "="
-    for entry in sorted(os.listdir(stage_dir)):
-        if not entry.startswith(pfx):
-            continue
+    staged = {e for e in os.listdir(stage_dir) if e.startswith(pfx)}
+    for entry in sorted(staged):
         _publish_dir(
             os.path.join(stage_dir, entry),
             os.path.join(live_dir, entry),
             hidden=True,
         )
+    emptied = {str(v) for v in retire}
+    for entry in sorted(os.listdir(live_dir)):
+        if (entry.startswith(pfx) and entry not in staged
+                and unquote(entry[len(pfx):]) in emptied):
+            _publish_dir(None, os.path.join(live_dir, entry), hidden=True)
     shutil.rmtree(stage_dir, ignore_errors=True)
+
+
+def _stage_partitions(df: DataFrame, live_dir: str) -> str:
+    """Write ``df`` partitioned by type into the staging sibling of
+    ``live_dir`` (nothing live changes); returns the stage dir for
+    ``_publish_partitions``."""
+    import shutil
+
+    stage = live_dir.rstrip("/") + ".__stage__"
+    shutil.rmtree(stage, ignore_errors=True)
+    df.write.mode("overwrite").partitionBy("type").parquet(stage)
+    return stage
 
 
 def merge_batch_scoped(
@@ -430,10 +476,7 @@ def merge_batch_scoped(
     a ``partitionBy("type")`` index layout, rewriting ONLY the type
     partitions present in the batch.
 
-    ``merge_batch`` (the monolithic-layout variant) re-reads and
-    re-writes the ENTIRE index every micro-batch — O(index) I/O that is
-    a scale-killer on a long-running stream over a 100 TB corpus.  Here
-    the read is partition-pruned to the batch's type(s), the merged
+    The read is partition-pruned to the batch's type, the merged
     result is staged partitioned-by-type, and each touched partition
     publishes with its own atomic cutover; untouched partitions' files
     are never opened, so per-batch work is O(touched partitions ∪
@@ -441,26 +484,12 @@ def merge_batch_scoped(
     per-row FTS trigger semantics (utils.py:90) expressed at partition
     granularity — and the plain-parquet analog of a Delta/Iceberg
     ``MERGE WHEN MATCHED`` whose file rewrite set is clustered by the
-    partition key.  Same last-writer-wins semantics as merge_batch
-    (convergence-tested against the batch indexer)."""
-    import os
-    import shutil
-
-    incoming = conform(batch_df, type_tag).withColumn("load_seq", F.lit(1))
+    partition key.  Convergence-tested against the batch indexer."""
     base = index_path.rstrip("/")
-    types = [type_tag]
-    existing = _read_partitioned(spark, base, types)
-    if existing is not None:
-        merged = last_writer_wins(
-            union_conformed([existing.withColumn("load_seq", F.lit(0)), incoming])
-        )
-    else:
-        merged = last_writer_wins(incoming)
-    stage = base + ".__stage__"
-    shutil.rmtree(stage, ignore_errors=True)
-    merged.write.mode("overwrite").partitionBy("type").parquet(stage)
-    os.makedirs(base, exist_ok=True)
-    _publish_partitions(stage, base)
+    merged, _ = upsert_batch(
+        batch_df, type_tag, _read_partitioned(spark, base, [type_tag])
+    )
+    _publish_partitions(_stage_partitions(merged, base), base)
 
 
 def incremental_index_stream(
@@ -470,116 +499,21 @@ def incremental_index_stream(
     type_tag: str,
     checkpoint_dir: str,
     trigger_available_now: bool = True,
-    partitioned: bool = False,
 ):
-    """Wire a conformed stream into the index via foreachBatch merge.
-
-    ``partitioned=True`` selects the partition-by-type layout +
-    partition-scoped merge (O(touched) per batch — the shape to run at
-    scale); default keeps the monolithic single-directory layout."""
-    body = merge_batch_scoped if partitioned else merge_batch
+    """Wire a conformed stream into the partition-by-type index via the
+    ``merge_batch_scoped`` foreachBatch body."""
     writer = (
         stream_df.writeStream.outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(
-            lambda bdf, bid: body(spark, bdf, bid, index_path, type_tag)
+            lambda bdf, bid: merge_batch_scoped(
+                spark, bdf, bid, index_path, type_tag
+            )
         )
     )
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def merge_fts_batch(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    batch_id: int,
-    index_path: str,
-    fts_path: str,
-    type_tag: str,
-    mode: str = "portable",
-    stem: bool = False,
-) -> None:
-    """foreachBatch body for incremental FTS maintenance (A10).
-
-    The reference keeps FTS in sync with per-row SQLite triggers
-    (utils.py:90) which its own batch indexer bypasses and rebuilds.
-    Here the index merge and the postings rebuild-of-affected-docs run
-    per micro-batch:
-
-    1. upsert the conformed batch into search_index (last-writer-wins);
-    2. drop the affected (type, key) docs from postings/doc_lengths
-       (anti-join — the streaming analog of the FTS delete trigger);
-    3. tokenize ONLY the incoming docs and append their postings.
-
-    Work per batch is O(batch), not O(index): the untouched postings
-    rows are carried through unchanged.  On Delta/Iceberg steps 2+3
-    become a MERGE; on plain Parquet we rewrite, same semantics.
-    """
-    import os
-
-    from dogsheep_beta_spark.operators.fts_index import postings_and_lengths
-
-    incoming = conform(batch_df, type_tag).withColumn("load_seq", F.lit(1))
-    existing = _read_existing(spark, index_path)
-    if existing is not None:
-        merged = last_writer_wins(
-            union_conformed([existing.withColumn("load_seq", F.lit(0)), incoming])
-        )
-    else:
-        merged = last_writer_wins(incoming)
-    # materialize the merged index aside FIRST: postings deltas below
-    # re-read it from the stable temp snapshot, and every old path
-    # stays untouched until all three outputs are ready to swap.
-    base = index_path.rstrip("/")
-    tmp_index = base + ".__tmp__"
-    import shutil
-
-    shutil.rmtree(tmp_index, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(tmp_index)
-    merged_disk = spark.read.parquet(tmp_index)
-
-    # postings delta for ONLY the batch's docs (post-merge rows, so a
-    # same-batch overwrite of an existing key reindexes the new text)
-    batch_keys = incoming.select("type", "key").distinct()
-    touched = merged_disk.join(batch_keys, ["type", "key"], "left_semi")
-    # the batch MUST be tokenized with the index's own analyzer spec
-    # (mode may carry FTS5 tokenizer arguments) — a default-tokenized
-    # delta against a porter/tokenchars index would silently fork the
-    # term dictionary between maintained and original postings
-    delta_post, delta_len = postings_and_lengths(touched, mode=mode, stem=stem)
-
-    post_path = os.path.join(fts_path, "postings")
-    len_path = os.path.join(fts_path, "doc_lengths")
-    old_post = _read_existing(spark, post_path)
-    old_len = _read_existing(spark, len_path)
-    if old_post is not None and old_len is not None:
-        new_post = old_post.join(batch_keys, ["type", "key"], "left_anti").unionByName(
-            delta_post
-        )
-        new_len = old_len.join(batch_keys, ["type", "key"], "left_anti").unionByName(
-            delta_len
-        )
-    else:
-        new_post, new_len = delta_post, delta_len
-    # STAGE both sidecars fully before publishing ANYTHING: an eager
-    # _atomic_swap_write(new_post, ...) here used to publish postings
-    # while the doc_lengths job was still running, so a live request in
-    # that window pinned new postings against stale lengths/index (an
-    # updated doc scored with its new tf but old dl).  Write all
-    # outputs aside, then cut the three symlinks over back-to-back —
-    # the same stage-all-publish-last protocol delete_fts_docs and
-    # merge_fts_batch_scoped already follow.
-    staged = []
-    for df_out, path in ((new_post, post_path), (new_len, len_path)):
-        out_base = path.rstrip("/")
-        tmp = out_base + ".__tmp__"
-        shutil.rmtree(tmp, ignore_errors=True)
-        df_out.write.mode("overwrite").parquet(tmp)
-        staged.append((tmp, out_base))
-    for tmp, out_base in staged:
-        _publish_dir(tmp, out_base)
-    _publish_dir(tmp_index, base)
 
 
 def delete_fts_docs(
@@ -589,42 +523,33 @@ def delete_fts_docs(
     fts_path: str,
 ) -> None:
     """Tombstone maintenance — remove (type, key) docs from the
-    persisted index AND its FTS sidecars (A10's missing third verb:
-    merge_fts_batch covers insert/update, this covers delete — the
-    analog of the reference's FTS delete trigger firing on row
-    removal, utils.py:90).
+    persisted index AND its FTS sidecars (A10's third verb:
+    ``merge_fts_batch_scoped`` covers insert/update, this covers
+    delete — the analog of the reference's FTS delete trigger firing on
+    row removal, utils.py:90).
 
-    One anti-join per table against the broadcast-size tombstone set;
-    work is O(index-partition scan) with no tokenization, and every
-    output publishes via the same atomic symlink cutover as the merge
-    path.  BM25 corpus stats (N, avgdl) are derived downstream from
-    doc_lengths, so they follow automatically.  On Delta/Iceberg this
-    is a MERGE ... WHEN MATCHED THEN DELETE.
-    """
+    Partition-scoped like the merge: only the tombstones' type
+    partitions are read, anti-joined against the broadcast tombstone
+    set, staged, and published (stage-all-publish-last); other types'
+    files are never opened.  A type whose every doc is deleted stages
+    no partition, so its live partition is retired instead.  No
+    tokenization; BM25 corpus stats (N, avgdl) derive from
+    doc_lengths downstream, so they follow.  On Delta/Iceberg this is
+    a MERGE ... WHEN MATCHED THEN DELETE."""
     import os
 
-    keys = F.broadcast(deletes.select("type", "key").distinct())
-    targets = [index_path, os.path.join(fts_path, "postings"),
-               os.path.join(fts_path, "doc_lengths")]
-    survivors = []
-    for path in targets:
-        existing = _read_existing(spark, path)
-        if existing is None:
-            survivors.append(None)
-            continue
-        kept = existing.join(keys, ["type", "key"], "left_anti")
-        # materialize before any path is swapped: each plan must read
-        # its CURRENT files, not a half-published mixture
-        base = path.rstrip("/")
-        tmp = base + ".__tmp__"
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
-        kept.write.mode("overwrite").parquet(tmp)
-        survivors.append((tmp, base))
-    for pair in survivors:
-        if pair is not None:
-            _publish_dir(*pair)
+    keys = deletes.select("type", "key").distinct()
+    types = [r["type"] for r in keys.select("type").distinct().collect()]
+    keys = F.broadcast(keys)
+    stages = []
+    for live in (index_path, os.path.join(fts_path, "postings"),
+                 os.path.join(fts_path, "doc_lengths")):
+        old = _read_partitioned(spark, live, types)
+        if old is not None:
+            kept = old.join(keys, ["type", "key"], "left_anti")
+            stages.append((_stage_partitions(kept, live), live))
+    for stage, live in stages:
+        _publish_partitions(stage, live, retire=types)
 
 
 def merge_fts_batch_scoped(
@@ -637,67 +562,47 @@ def merge_fts_batch_scoped(
     mode: str = "portable",
     stem: bool = False,
 ) -> None:
-    """Partition-scoped incremental FTS maintenance (A10 at scale):
-    index, postings AND doc_lengths all live in ``partitionBy("type")``
+    """foreachBatch body for incremental FTS maintenance (A10): index,
+    postings AND doc_lengths all live in ``partitionBy("type")``
     layouts, and a micro-batch rewrites only the type partitions it
     touches.
 
-    Same three steps as ``merge_fts_batch`` — upsert the index
-    partition, anti-join the batch's (type, key) docs out of the
-    postings/doc_lengths partitions, tokenize ONLY the incoming docs
-    and append their rows — but every read is partition-pruned and
-    every write is a per-partition cutover, so a batch for type X does
-    zero I/O against the postings of every other type.  Tokenization
-    stays O(batch); partition rewrite is O(touched partitions).  The
+    The reference keeps FTS in sync with per-row SQLite triggers
+    (utils.py:90) which its own batch indexer bypasses and rebuilds.
+    Here, per micro-batch: upsert the index partition
+    (``upsert_batch``), stage it, and from the staged copy take the
+    postings/doc_lengths delta (``fts_delta``); every read is
+    partition-pruned and every write is a per-partition cutover, so a
+    batch for type X does zero I/O against every other type.  The
     postings-by-type layout serves the MAINTENANCE path; the search
     path's term-bucketed layout (write_fts_index) is produced from it
     by the periodic rebuild, exactly as the reference's batch indexer
     rebuilds FTS over the trigger-maintained table (utils.py:57-63)."""
     import os
-    import shutil
 
-    from dogsheep_beta_spark.operators.fts_index import postings_and_lengths
-
-    incoming = conform(batch_df, type_tag).withColumn("load_seq", F.lit(1))
     base = index_path.rstrip("/")
     types = [type_tag]
-    existing = _read_partitioned(spark, base, types)
-    if existing is not None:
-        merged = last_writer_wins(
-            union_conformed([existing.withColumn("load_seq", F.lit(0)), incoming])
-        )
-    else:
-        merged = last_writer_wins(incoming)
+    merged, batch_keys = upsert_batch(
+        batch_df, type_tag, _read_partitioned(spark, base, types)
+    )
     # stage the merged index partitions FIRST: the postings delta below
     # reads this stable snapshot, and no live path changes until all
     # three outputs are staged.
-    stage_idx = base + ".__stage__"
-    shutil.rmtree(stage_idx, ignore_errors=True)
-    merged.write.mode("overwrite").partitionBy("type").parquet(stage_idx)
-    merged_disk = spark.read.parquet(stage_idx)
-
-    batch_keys = incoming.select("type", "key").distinct()
-    touched = merged_disk.join(batch_keys, ["type", "key"], "left_semi")
-    # index's own analyzer spec — see merge_fts_batch
-    delta_post, delta_len = postings_and_lengths(touched, mode=mode, stem=stem)
-
-    stages = []
-    for name, delta in (("postings", delta_post), ("doc_lengths", delta_len)):
-        live = os.path.join(fts_path, name)
-        old = _read_partitioned(spark, live, types)
-        if old is not None:
-            new = old.join(batch_keys, ["type", "key"], "left_anti").unionByName(
-                delta
-            )
-        else:
-            new = delta
-        stage = live.rstrip("/") + ".__stage__"
-        shutil.rmtree(stage, ignore_errors=True)
-        new.write.mode("overwrite").partitionBy("type").parquet(stage)
-        stages.append((stage, live))
-    for stage, live in stages:
-        _publish_partitions(stage, live)
-    os.makedirs(base, exist_ok=True)
+    stage_idx = _stage_partitions(merged, base)
+    post_live = os.path.join(fts_path, "postings")
+    len_live = os.path.join(fts_path, "doc_lengths")
+    new_post, new_len = fts_delta(
+        spark.read.parquet(stage_idx),
+        batch_keys,
+        _read_partitioned(spark, post_live, types),
+        _read_partitioned(spark, len_live, types),
+        mode=mode,
+        stem=stem,
+    )
+    stage_post = _stage_partitions(new_post, post_live)
+    stage_len = _stage_partitions(new_len, len_live)
+    _publish_partitions(stage_post, post_live)
+    _publish_partitions(stage_len, len_live)
     _publish_partitions(stage_idx, base)
 
 
@@ -708,23 +613,27 @@ def incremental_fts_stream(
     fts_path: str,
     type_tag: str,
     checkpoint_dir: str,
-    partitioned: bool = False,
+    partitioned: bool = True,
     mode: str = "portable",
     stem: bool = False,
 ):
-    """Wire a conformed stream into index + FTS via foreachBatch.
+    """Wire a conformed stream into index + FTS via the
+    ``merge_fts_batch_scoped`` foreachBatch body.
 
-    ``partitioned=True`` selects the partition-scoped merge (O(touched
-    partitions) per batch instead of a full index+postings rewrite).
-    ``mode``/``stem`` must match the analyzer the index was built with
-    (mode may carry FTS5 tokenizer arguments, e.g.
-    ``"unicode61 tokenchars '#'"``)."""
-    body = merge_fts_batch_scoped if partitioned else merge_fts_batch
+    ``partitioned`` only accepts True, the one maintained layout (the
+    monolithic whole-table layout was removed).  ``mode``/``stem``
+    must match the analyzer the index was built with (mode may carry
+    FTS5 tokenizer arguments, e.g. ``"unicode61 tokenchars '#'"``)."""
+    if not partitioned:
+        raise ValueError(
+            "incremental_fts_stream maintains only the partition-by-type "
+            "layout; partitioned=False is not supported"
+        )
     return (
         stream_df.writeStream.outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(
-            lambda bdf, bid: body(
+            lambda bdf, bid: merge_fts_batch_scoped(
                 spark, bdf, bid, index_path, fts_path, type_tag,
                 mode=mode, stem=stem,
             )
@@ -1745,23 +1654,8 @@ def merge_link_batch(
     end."""
     import os
     import shutil
-    import sys
-    import time
 
     from dogsheep_beta_spark.operators.linkage import _normalized
-
-    _prof = os.environ.get("DBS_PROFILE_STREAM")
-    _t = time.time()
-
-    def _mark(label: str) -> None:
-        nonlocal _t
-        if _prof:
-            now = time.time()
-            print(
-                f"# linkprof b{batch_id} {label} {now - _t:.3f}",
-                file=sys.stderr,
-            )
-            _t = now
 
     keys = [*block_cols, "__pfx"]
     new = (
@@ -1788,7 +1682,6 @@ def merge_link_batch(
     has_history = os.path.isdir(store_path) or os.path.isdir(match_path)
     if has_history:
         touched = [str(r[0]) for r in new.select("bkb").distinct().collect()]
-        _mark("touched_collect")
         if not touched:
             return
     else:
@@ -1938,12 +1831,10 @@ def merge_link_batch(
             new_only = new
         new_only.write.mode("append").partitionBy("bkb").parquet(store_path)
 
-    _mark("plan_built")
     with ThreadPoolExecutor(max_workers=2) as ex:
         futs = [ex.submit(w) for w in (_w_matches, _w_store)]
         for f in futs:
             f.result()  # re-raise the first failure
-    _mark("writes_done")
     all_recs.unpersist()
 
 
@@ -2038,8 +1929,6 @@ def merge_minhash_batch(
     (``streaming_dedup``) which removes the exact-duplicate mass that
     creates hot buckets in the first place."""
     import os
-    import sys
-    import time
 
     from dogsheep_beta_spark.operators.dedup import (
         _minhash_signatures,
@@ -2055,19 +1944,6 @@ def merge_minhash_batch(
     # job every scoped read would otherwise pay per batch (r9)
     idx_schema = "id bigint, band int, bucket string, bb int"
     store_schema = "id bigint, shingles array<string>, idb int"
-
-    _prof = os.environ.get("DBS_PROFILE_STREAM")
-    _t = time.time()
-
-    def _mark(label: str) -> None:
-        nonlocal _t
-        if _prof:
-            now = time.time()
-            print(
-                f"# mhprof b{batch_id} {label} {now - _t:.3f}",
-                file=sys.stderr,
-            )
-            _t = now
 
     # id-dedup FIRST, on the raw (id, text) rows, THEN tokenize: the
     # batch arrives as O(1) source files, so everything before the
@@ -2112,7 +1988,6 @@ def merge_minhash_batch(
     ).first()
     touched = [str(b) for b in sorted(hdr["bbs"])]
     pre_idb = [str(i) for i in sorted(hdr["idbs"])]
-    _mark("touched_collect")
     if not touched:
         pre.unpersist()
         new_band.unpersist()
@@ -2230,7 +2105,6 @@ def merge_minhash_batch(
             F.collect_set(_idb("b")).alias("ib"),
         ).first()
         cand_idb = [str(i) for i in sorted({*chdr["ia"], *chdr["ib"]})]
-        _mark("cand_collect")
         store = (
             _read_partitioned(
                 spark, store_path, cand_idb, col="idb", schema=store_schema
@@ -2238,7 +2112,6 @@ def merge_minhash_batch(
             if cand_idb
             else None
         )
-        _mark("store_read")
         if store is not None:
             shings = (
                 store.select("id", "shingles")
@@ -2307,7 +2180,6 @@ def merge_minhash_batch(
         # joins _index_fut (and any submitted write) before the
         # exception propagates to foreachBatch.
         _pool.shutdown(wait=True)
-    _mark("writes")
     cand.unpersist()
     new_band.unpersist()
     pre.unpersist()
@@ -2610,8 +2482,6 @@ def merge_semantic_batch(
     later scoped scans stop paying the file-count tax (the same fix
     the MinHash store got in r9)."""
     import os
-    import sys
-    import time
 
     from dogsheep_beta_spark.operators.dedup import cosine_expr
     from dogsheep_beta_spark.operators.similarity import voronoi_assign
@@ -2620,19 +2490,6 @@ def merge_semantic_batch(
     match_path = os.path.join(root_path, "matches")
     _check_layout_tau(root_path, tau)  # bands are a function of tau
     eps, q = _sem_thresh_q(tau)
-
-    _prof = os.environ.get("DBS_PROFILE_STREAM")
-    _t = time.time()
-
-    def _mark(label: str) -> None:
-        nonlocal _t
-        if _prof:
-            now = time.time()
-            print(
-                f"# semprof b{batch_id} {label} {now - _t:.3f}",
-                file=sys.stderr,
-            )
-            _t = now
 
     if pivots is None:
         # direct (non-stream) callers: derive the fixed pivot table
@@ -2695,7 +2552,6 @@ def merge_semantic_batch(
             F.count(F.lit(1)).alias("n"),
             F.collect_set("cell").alias("cells"),
         ).first()
-        _mark("hdr")
         if not hdr["n"]:
             return
         touched = sorted(hdr["cells"])
@@ -2859,22 +2715,10 @@ def merge_semantic_batch(
                 "cell"
             ).parquet(store_path)
 
-        def _timed(w):
-            t0 = time.time()
-            w()
-            print(
-                f"# semprof b{batch_id} {w.__name__} {time.time() - t0:.3f}",
-                file=sys.stderr,
-            )
-
         with ThreadPoolExecutor(max_workers=2) as ex:
-            futs = [
-                ex.submit(_timed, w) if _prof else ex.submit(w)
-                for w in (_w_matches, _w_store)
-            ]
+            futs = [ex.submit(w) for w in (_w_matches, _w_store)]
             for f in futs:
                 f.result()  # re-raise the first failure
-        _mark("writes")
 
     finally:
         for _df in _persisted:

@@ -474,11 +474,7 @@ def test_http_serve_e2e(page_ctx):
         srv.server_close()
 
 
-import pytest as _pytest
-
-
-@_pytest.mark.parametrize("partitioned", [False, True])
-def test_serve_while_indexing_e2e(spark, partitioned):
+def test_serve_while_indexing_e2e(spark):
     """Serve-while-indexing (round 6): a LIVE server whose index + FTS
     layouts are being appended by the streaming foreachBatch merge —
     the reference's trigger-maintained-FTS story (utils.py:90: SQLite
@@ -488,9 +484,9 @@ def test_serve_while_indexing_e2e(spark, partitioned):
     generation — result counts only ever take complete-batch values
     (docs arrive 5 per batch, so any count outside {5, 10} is a torn
     read); (3) the server survives the concurrent publish; (4) the
-    BM25 corpus scalars track the published generation in BOTH layouts
-    (the partitioned layout's top-level realpath never changes — its
-    per-partition symlink targets are the cache key since round 6)."""
+    BM25 corpus scalars track the published generation (the layout's
+    top-level realpath never changes — its per-partition symlink
+    targets are the cache key since round 6)."""
     import os
     import re
     import shutil
@@ -518,7 +514,6 @@ def test_serve_while_indexing_e2e(spark, partitioned):
             ).parquet(src)
             q = incremental_fts_stream(
                 spark, stream, index_path, fts_path, "live.db/docs", ckpt,
-                partitioned=partitioned,
             )
             q.awaitTermination(120)
 
@@ -566,7 +561,7 @@ def test_serve_while_indexing_e2e(spark, partitioned):
             assert fetch_count() == 10
             # (4) the per-request snapshot's BM25 scalars follow the
             # publish — a stale cache froze n_docs at the first
-            # request's generation forever in the partitioned layout
+            # request's generation forever
             from dogsheep_beta_spark.server import load_live_snapshot
 
             _, live_fts = load_live_snapshot(spark, index_path, fts_path)
@@ -578,8 +573,7 @@ def test_serve_while_indexing_e2e(spark, partitioned):
         shutil.rmtree(root, ignore_errors=True)
 
 
-@_pytest.mark.parametrize("partitioned", [False, True])
-def test_snapshot_pins_survive_publish_storm(spark, partitioned):
+def test_snapshot_pins_survive_publish_storm(spark):
     """Fault injection for the round-7 pin protocol (VERDICT r6 #1):
     a request acquires its snapshot, then MULTIPLE publishes land
     BEFORE the request executes a single Spark job — exactly the
@@ -598,12 +592,8 @@ def test_snapshot_pins_survive_publish_storm(spark, partitioned):
         load_live_snapshot,
         release_snapshot,
     )
-    from dogsheep_beta_spark.streaming.incremental import (
-        merge_fts_batch,
-        merge_fts_batch_scoped,
-    )
+    from dogsheep_beta_spark.streaming.incremental import merge_fts_batch_scoped
 
-    body = merge_fts_batch_scoped if partitioned else merge_fts_batch
     root = tempfile.mkdtemp(prefix="dbs_pins_", dir="/tmp")
     try:
         index_path = os.path.join(root, "index")
@@ -615,7 +605,9 @@ def test_snapshot_pins_survive_publish_storm(spark, partitioned):
                 [(i, f"needle doc {i}", "filler") for i in range(lo, hi)],
                 schema,
             )
-            body(spark, bdf, lo, index_path, fts_path, "live.db/docs")
+            merge_fts_batch_scoped(
+                spark, bdf, lo, index_path, fts_path, "live.db/docs"
+            )
 
         publish(0, 5)
         # the request resolves + pins its snapshot ... and then stalls

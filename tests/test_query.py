@@ -50,6 +50,46 @@ def test_equality_and_date_filters(plugin_index):
     ]
 
 
+def _bad_timestamp_index(spark):
+    from dogsheep_beta_spark.indexer import build_search_index
+
+    spark.createDataFrame(
+        [(1, "2024-01-01 10:00:00"), (2, "not a date"), (3, "2024-01-02")],
+        "id int, ts string",
+    ).createOrReplaceTempView("bad_ts_src")
+    return build_search_index(
+        spark, {"d": {"r": {"sql": "select id as key, ts as timestamp from bad_ts_src"}}}
+    )
+
+
+def test_date_filter_skips_unparseable_timestamps(spark):
+    """SQLite compares date(timestamp) text with the arg: a row whose
+    timestamp does not parse has a NULL date and simply never matches.
+    Under ANSI casts a plain to_date raised CAST_INVALID_INPUT at
+    collect (an HTTP 500 for ?timestamp__date=)."""
+    res = compile_plan(_bad_timestamp_index(spark), QueryPlan(date="2024-01-01"))
+    with res:
+        assert [r["key"] for r in res.results.collect()] == ["1"]
+        assert res.facets.count == 1
+
+
+def test_date_filter_non_canonical_arg_matches_nothing(spark, plugin_index):
+    """An arg that is not a canonical YYYY-MM-DD matches no row (SQLite
+    text comparison) instead of failing the ANSI cast at persist."""
+    for arg in ("garbage", "2020-8-1", "20200801", "2020-02-30"):
+        res = compile_plan(plugin_index, QueryPlan(date=arg))
+        with res:
+            assert res.results.collect() == [], arg
+            assert res.facets.count == 0, arg
+
+
+def test_page_context_garbage_date_is_an_empty_page(spark, plugin_index):
+    from dogsheep_beta_spark.page import page_context
+
+    ctx = page_context(spark, plugin_index, None, {"timestamp__date": "garbage"})
+    assert ctx["count"] == 0 and ctx["results"] == []
+
+
 def test_sort_overrides(plugin_index):
     newest = timeline_query(plugin_index, QueryPlan(sort="newest"))
     oldest = timeline_query(plugin_index, QueryPlan(sort="oldest"))

@@ -46,6 +46,7 @@ def test_incremental_merge_converges_to_batch(spark, tmpdir):
     q = incremental_index_stream(spark, stream, index_path, "s.db/items", ckpt)
     q.awaitTermination(60)
 
+    spark.catalog.refreshByPath(index_path)
     got1 = {r["key"]: r["title"] for r in spark.read.parquet(index_path).collect()}
     assert got1 == {"1": "one", "2": "two"}
 
@@ -56,6 +57,7 @@ def test_incremental_merge_converges_to_batch(spark, tmpdir):
     q = incremental_index_stream(spark, stream, index_path, "s.db/items", ckpt)
     q.awaitTermination(60)
 
+    spark.catalog.refreshByPath(index_path)
     final = {r["key"]: r["title"] for r in spark.read.parquet(index_path).collect()}
     assert final == {"1": "one", "2": "two-updated", "3": "three"}
 
@@ -125,6 +127,17 @@ def test_incremental_fts_converges_to_batch(spark, tmpdir):
     idx = {r["key"]: r["title"] for r in spark.read.parquet(index_path).collect()}
     assert idx == {"1": "alpha beta", "2": "delta", "3": "alpha"}
     assert ("beta", "2", "title", 2, (0, 1)) not in streamed
+
+
+def test_incremental_fts_stream_rejects_monolithic_layout():
+    """The partition-by-type layout is the only maintained one: asking
+    for the removed whole-table layout fails before any stream starts."""
+    from dogsheep_beta_spark.streaming.incremental import incremental_fts_stream
+
+    with pytest.raises(ValueError, match="partition-by-type"):
+        incremental_fts_stream(
+            None, None, "index", "fts", "s.db/t", "ckpt", partitioned=False
+        )
 
 
 def test_windowed_event_counts(spark, tmpdir):
@@ -228,32 +241,34 @@ def test_streaming_sessionize_closed_sessions_match_batch(spark, tmpdir):
 
 
 def test_merge_batch_raises_on_corrupt_index(spark, tmpdir):
-    """A transient/corrupt read of the existing index must RAISE, not be
-    treated as 'first batch' — the old bare-except path overwrote the
-    whole index with just the micro-batch (silent data loss)."""
-    from dogsheep_beta_spark.streaming.incremental import merge_batch
+    """A transient/corrupt read of the batch's existing type partition
+    must RAISE, not be treated as 'first batch' — an old bare-except
+    path overwrote the whole index with just the micro-batch (silent
+    data loss)."""
+    from dogsheep_beta_spark.streaming.incremental import merge_batch_scoped
 
-    index_path = os.path.join(tmpdir, "index")
-    os.makedirs(index_path)
-    with open(os.path.join(index_path, "part-00000.parquet"), "w") as f:
+    part = os.path.join(tmpdir, "index", "type=db%2Ft")
+    os.makedirs(part)
+    with open(os.path.join(part, "part-00000.parquet"), "w") as f:
         f.write("this is not parquet")
     batch = spark.createDataFrame(
         [(1, "t", "2020-01-01", "x")], "key int, title string, timestamp string, search_1 string"
     )
     with pytest.raises(Exception):
-        merge_batch(spark, batch, 0, index_path, "db/t")
-    # the corrupt directory is untouched (no destructive overwrite)
-    assert os.path.exists(os.path.join(index_path, "part-00000.parquet"))
+        merge_batch_scoped(spark, batch, 0, os.path.join(tmpdir, "index"), "db/t")
+    # the corrupt partition is untouched (no destructive overwrite)
+    assert os.path.exists(os.path.join(part, "part-00000.parquet"))
+    assert not os.path.islink(part)
 
 
 def test_merge_batch_missing_path_is_first_batch(spark, tmpdir):
-    from dogsheep_beta_spark.streaming.incremental import merge_batch
+    from dogsheep_beta_spark.streaming.incremental import merge_batch_scoped
 
     index_path = os.path.join(tmpdir, "fresh_index")
     batch = spark.createDataFrame(
         [(1, "t", "2020-01-01", "x")], "key int, title string, timestamp string, search_1 string"
     )
-    merge_batch(spark, batch, 0, index_path, "db/t")
+    merge_batch_scoped(spark, batch, 0, index_path, "db/t")
     assert spark.read.parquet(index_path).count() == 1
 
 
@@ -301,8 +316,9 @@ def test_atomic_swap_migrates_legacy_real_dir(spark, tmpdir):
 
 def test_delete_fts_docs_tombstones(spark, tmpdir):
     """delete_fts_docs removes the doc from index + postings +
-    doc_lengths atomically; the surviving index equals a batch rebuild
-    over the surviving corpus (so BM25 stats follow)."""
+    doc_lengths of the streamed (partition-by-type) layout; the
+    surviving index equals a batch rebuild over the surviving corpus
+    (so BM25 stats follow)."""
     from dogsheep_beta_spark.operators.fts_index import build_fts_index
     from dogsheep_beta_spark.streaming.incremental import (
         delete_fts_docs,
@@ -324,6 +340,7 @@ def test_delete_fts_docs_tombstones(spark, tmpdir):
         [("s.db/t", "2")], "type string, key string"
     )
     delete_fts_docs(spark, deletes, index_path, fts_path)
+    _refresh(spark, index_path, fts_path)
 
     idx = {r["key"] for r in spark.read.parquet(index_path).collect()}
     assert idx == {"1", "3"}
@@ -349,7 +366,122 @@ def test_delete_fts_docs_tombstones(spark, tmpdir):
     assert lens == {r["key"]: r["dl"] for r in rebuilt.doc_lengths.collect()}
     # idempotent: deleting an absent key is a no-op
     delete_fts_docs(spark, deletes, index_path, fts_path)
+    _refresh(spark, index_path, fts_path)
     assert {r["key"] for r in spark.read.parquet(index_path).collect()} == {"1", "3"}
+
+
+def _refresh(spark, index_path, fts_path):
+    """Drop the session's cached file listings of the three FTS tables
+    (a publish re-points their ``type=`` symlinks)."""
+    for p in (index_path, os.path.join(fts_path, "postings"),
+              os.path.join(fts_path, "doc_lengths")):
+        spark.catalog.refreshByPath(p)
+
+
+def _two_type_fts(spark, tmpdir):
+    """index + fts paths holding two types: s.db/t (keys 1-3) and
+    o.db/t (key 50), maintained by merge_fts_batch_scoped."""
+    from dogsheep_beta_spark.streaming.incremental import merge_fts_batch_scoped
+
+    index_path = os.path.join(tmpdir, "index")
+    fts_path = os.path.join(tmpdir, "fts")
+    schema = "key int, title string, search_1 string"
+    for bid, (rows, tag) in enumerate([
+        ([(1, "alpha beta", "gamma"), (2, "beta beta", None),
+          (3, "alpha", "x")], "s.db/t"),
+        ([(50, "zeta omega", "psi")], "o.db/t"),
+    ]):
+        merge_fts_batch_scoped(
+            spark, spark.createDataFrame(rows, schema), bid,
+            index_path, fts_path, tag,
+        )
+    tables = [index_path, os.path.join(fts_path, "postings"),
+              os.path.join(fts_path, "doc_lengths")]
+    return index_path, fts_path, tables
+
+
+def test_delete_every_doc_of_a_type_retires_its_partitions(spark, tmpdir):
+    """Tombstoning every doc of one type leaves no rows of that type in
+    any of the three tables, and no ``type=`` partition for it (an
+    empty stage publishes nothing, so the partition is retired)."""
+    from dogsheep_beta_spark.streaming.incremental import delete_fts_docs
+
+    index_path, fts_path, tables = _two_type_fts(spark, tmpdir)
+    deletes = spark.createDataFrame(
+        [("o.db/t", "50")], "type string, key string"
+    )
+    delete_fts_docs(spark, deletes, index_path, fts_path)
+    _refresh(spark, index_path, fts_path)
+    for t in tables:
+        assert not [e for e in os.listdir(t) if e.startswith("type=o.db")], t
+        types = {r["type"] for r in spark.read.parquet(t).collect()}
+        assert types == {"s.db/t"}, t
+
+
+def test_delete_leaves_untouched_type_byte_identical(spark, tmpdir):
+    """A delete scoped to type s never rewrites type o: in all three
+    tables o's partition resolves to the same version dir, with the
+    same files, sizes and mtimes."""
+    from dogsheep_beta_spark.streaming.incremental import delete_fts_docs
+
+    index_path, fts_path, tables = _two_type_fts(spark, tmpdir)
+
+    def o_part(t):
+        return os.path.join(
+            t, next(e for e in os.listdir(t) if e.startswith("type=o.db"))
+        )
+
+    before = {t: os.path.realpath(o_part(t)) for t in tables}
+    stats = {t: _file_stats(v) for t, v in before.items()}
+    deletes = spark.createDataFrame(
+        [("s.db/t", "2")], "type string, key string"
+    )
+    delete_fts_docs(spark, deletes, index_path, fts_path)
+    _refresh(spark, index_path, fts_path)
+    for t in tables:
+        assert os.path.realpath(o_part(t)) == before[t], t
+        assert _file_stats(before[t]) == stats[t], t
+    idx = {(r["type"], r["key"]) for r in spark.read.parquet(index_path).collect()}
+    assert idx == {("s.db/t", "1"), ("s.db/t", "3"), ("o.db/t", "50")}
+
+
+def test_snapshot_pinned_before_delete_reads_its_generation(spark, tmpdir):
+    """A live-server snapshot taken before a delete (and a later merge
+    into the same type, which would sweep an unpinned generation) still
+    reads its own generation: the deleted doc, the old corpus stats."""
+    from dogsheep_beta_spark.server import load_live_snapshot, release_snapshot
+    from dogsheep_beta_spark.streaming.incremental import (
+        delete_fts_docs,
+        merge_fts_batch_scoped,
+    )
+
+    index_path, fts_path, _ = _two_type_fts(spark, tmpdir)
+    index_df, fts = load_live_snapshot(spark, index_path, fts_path)
+    try:
+        deletes = spark.createDataFrame(
+            [("s.db/t", "2"), ("o.db/t", "50")], "type string, key string"
+        )
+        delete_fts_docs(spark, deletes, index_path, fts_path)
+        merge_fts_batch_scoped(
+            spark,
+            spark.createDataFrame(
+                [(4, "delta", None)], "key int, title string, search_1 string"
+            ),
+            2, index_path, fts_path, "s.db/t",
+        )
+        assert {r["key"] for r in index_df.collect()} == {"1", "2", "3", "50"}
+        assert fts.n_docs == 4
+        assert {r["key"] for r in fts.doc_lengths.collect()} == {
+            "1", "2", "3", "50"
+        }
+    finally:
+        release_snapshot(fts)
+    fresh_df, fresh = load_live_snapshot(spark, index_path, fts_path)
+    try:
+        assert {r["key"] for r in fresh_df.collect()} == {"1", "3", "4"}
+        assert fresh.n_docs == 3
+    finally:
+        release_snapshot(fresh)
 
 
 def test_streaming_ivf_upsert_converges_to_batch(spark, tmpdir):
@@ -665,9 +797,9 @@ def test_scoped_merge_untouched_partition_not_even_opened(spark, tmpdir):
 
 
 def test_scoped_incremental_index_stream(spark, tmpdir):
-    """The partitioned=True stream wiring converges across restarts
-    exactly like the monolithic one (same assertions as
-    test_incremental_merge_converges_to_batch)."""
+    """The stream wiring writes the partition-by-type layout — each
+    ``type=`` child a symlink to a hidden version dir — and converges
+    across restarts."""
     src = os.path.join(tmpdir, "src")
     index_path = os.path.join(tmpdir, "index")
     ckpt = os.path.join(tmpdir, "ckpt")
@@ -677,16 +809,16 @@ def test_scoped_incremental_index_stream(spark, tmpdir):
 
     spark.createDataFrame(rows1, schema).write.mode("append").parquet(src)
     stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    q = incremental_index_stream(
-        spark, stream, index_path, "s.db/items", ckpt, partitioned=True
-    )
+    q = incremental_index_stream(spark, stream, index_path, "s.db/items", ckpt)
     q.awaitTermination(60)
     spark.createDataFrame(rows2, schema).write.mode("append").parquet(src)
     stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    q = incremental_index_stream(
-        spark, stream, index_path, "s.db/items", ckpt, partitioned=True
-    )
+    q = incremental_index_stream(spark, stream, index_path, "s.db/items", ckpt)
     q.awaitTermination(60)
+
+    visible = [e for e in os.listdir(index_path) if not e.startswith(".")]
+    assert visible == ["type=s.db%2Fitems"]
+    assert os.path.islink(os.path.join(index_path, visible[0]))
 
     spark.catalog.refreshByPath(index_path)
     final = {r["key"]: r["title"] for r in spark.read.parquet(index_path).collect()}
@@ -2429,65 +2561,16 @@ def test_crash_injection_entity_link_merge(spark, tmpdir, crash_injector):
 
 
 @pytest.mark.slow
-def test_crash_injection_fts_merge(spark, tmpdir, crash_injector):
-    """Every write/rename boundary of merge_fts_batch (the A10
-    incremental FTS maintenance path) is crash-replayable: index,
-    postings and doc_lengths all converge to the uninterrupted run —
-    including crashes BETWEEN the three stage-all-publish-last
-    cutovers, where a reader-visible transient (new postings against
-    an old index) must be healed by the replay, and same-key updates
-    whose second application must stay last-writer-wins."""
-    from dogsheep_beta_spark.streaming.incremental import merge_fts_batch
-
-    schema = "key int, title string, search_1 string"
-    batches = [
-        [(1, "alpha beta", "gamma"), (2, "beta beta", None)],
-        [(2, "delta", "beta gamma"), (3, "alpha", "alpha")],  # updates 2
-        [(1, "omega", None), (4, "epsilon zeta", "eta")],     # updates 1
-    ]
-
-    def apply_batch(root, b):
-        bdf = spark.createDataFrame(batches[b], schema)
-        merge_fts_batch(
-            spark, bdf, b, os.path.join(root, "index"),
-            os.path.join(root, "fts"), "s.db/t",
-        )
-
-    def snapshot(root):
-        post = sorted(
-            (r["term"], r["key"], r["field"], r["tf"], tuple(r["positions"]))
-            for r in spark.read.parquet(
-                os.path.join(root, "fts", "postings")
-            ).collect()
-        )
-        lens = sorted(
-            (r["key"], r["dl"])
-            for r in spark.read.parquet(
-                os.path.join(root, "fts", "doc_lengths")
-            ).collect()
-        )
-        idx = sorted(
-            (r["key"], r["title"])
-            for r in spark.read.parquet(
-                os.path.join(root, "index")
-            ).collect()
-        )
-        return (post, lens, idx)
-
-    _sweep_crash_points(
-        spark, tmpdir, crash_injector, "fts", apply_batch, snapshot,
-        crash_batches=(0, 1),
-    )
-
-
-@pytest.mark.slow
 def test_crash_injection_fts_scoped_merge(spark, tmpdir, crash_injector):
-    """The partition-SCOPED FTS maintenance variant
-    (merge_fts_batch_scoped — the serving path's layout) under the
-    same sweep: per-type partition cutovers, sidecar staging, and
-    cross-type isolation must all replay clean, including a batch that
-    touches a DIFFERENT type between the crashed batch and its
-    replay-equivalent reference."""
+    """Every write/rename boundary of merge_fts_batch_scoped (the A10
+    incremental FTS maintenance) is crash-replayable: index, postings
+    and doc_lengths all converge to the uninterrupted run — including
+    a crash in the FIRST batch (nothing published yet), crashes
+    BETWEEN the stage-all-publish-last partition cutovers, where a
+    reader-visible transient (new postings against an old index
+    partition) must be healed by the replay, same-key updates whose
+    second application must stay last-writer-wins, and a batch that
+    touches a DIFFERENT type after the crashed batch."""
     from dogsheep_beta_spark.streaming.incremental import (
         merge_fts_batch_scoped,
     )
@@ -2496,6 +2579,7 @@ def test_crash_injection_fts_scoped_merge(spark, tmpdir, crash_injector):
     batches = [
         ([(1, "alpha beta", "gamma"), (2, "beta beta", None)], "s.db/t"),
         ([(2, "delta", "beta gamma"), (3, "alpha", "alpha")], "s.db/t"),
+        ([(1, "omega", None), (4, "epsilon zeta", "eta")], "s.db/t"),
         ([(50, "zeta omega", "psi")], "o.db/t"),  # unrelated type
     ]
 
@@ -2529,7 +2613,7 @@ def test_crash_injection_fts_scoped_merge(spark, tmpdir, crash_injector):
 
     _sweep_crash_points(
         spark, tmpdir, crash_injector, "ftssc", apply_batch, snapshot,
-        crash_batches=(1,),
+        n_batches=len(batches), crash_batches=(0, 1),
     )
 
 
