@@ -44,6 +44,45 @@ SEARCH_INDEX_SCHEMA = T.StructType(
     ]
 )
 
+# File schemas of the three streamed live tables (streaming/incremental.py
+# writes them, server.load_live_snapshot reads them).  Each is written
+# ``partitionBy("type")``, so its parquet files hold every column but
+# ``type``.  Readers pass these instead of inferring from footers: no
+# inference job per read, and a table with no partition yet still has a
+# schema.  Change them together with ``conform`` / ``postings_and_lengths``
+# (tests/test_streaming.py compares them with the written footers).
+LIVE_INDEX_FILE_SCHEMA = T.StructType(
+    [f for f in SEARCH_INDEX_SCHEMA.fields if f.name != "type"]
+)
+LIVE_POSTINGS_FILE_SCHEMA = T.StructType(
+    [
+        T.StructField("term", T.StringType(), True),
+        T.StructField("key", T.StringType(), True),
+        T.StructField("field", T.StringType(), True),
+        T.StructField("tf", T.LongType(), True),
+        T.StructField("positions", T.ArrayType(T.IntegerType()), True),
+    ]
+)
+LIVE_DOC_LENGTHS_FILE_SCHEMA = T.StructType(
+    [
+        T.StructField("key", T.StringType(), True),
+        T.StructField("dl", T.LongType(), True),
+    ]
+)
+
+
+def with_type_column(file_schema: T.StructType) -> T.StructType:
+    """A live table's file schema plus its ``type`` partition column,
+    last, where a partitioned read puts it (the ``basePath`` reads)."""
+    return T.StructType(
+        file_schema.fields + [T.StructField("type", T.StringType(), True)]
+    )
+
+
+LIVE_INDEX_SCHEMA = with_type_column(LIVE_INDEX_FILE_SCHEMA)
+LIVE_POSTINGS_SCHEMA = with_type_column(LIVE_POSTINGS_FILE_SCHEMA)
+LIVE_DOC_LENGTHS_SCHEMA = with_type_column(LIVE_DOC_LENGTHS_FILE_SCHEMA)
+
 # Seed dimension rows, re-planted on every index run (utils.py:23-27,74).
 CATEGORIES = [
     {"id": 1, "name": "created"},

@@ -47,9 +47,15 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from dogsheep_beta_spark.operators.conform import conform
 from dogsheep_beta_spark.operators.upsert import last_writer_wins, union_conformed
+from dogsheep_beta_spark.schema import (
+    LIVE_DOC_LENGTHS_SCHEMA,
+    LIVE_INDEX_SCHEMA,
+    LIVE_POSTINGS_SCHEMA,
+)
 
 
 def _publish_dir(src_dir: str | None, path: str, hidden: bool = False) -> None:
@@ -178,6 +184,14 @@ def _pid_alive(pid: int) -> bool:
     return True
 
 
+def is_version_dir(path: str) -> bool:
+    """True iff ``path`` is a version dir ``_publish_dir`` published
+    (``<name>.__v<n>__``): immutable, unlike a legacy plain dir."""
+    import os
+
+    return ".__v" in os.path.basename(path.rstrip("/"))
+
+
 def pin_generation(vdir: str) -> str | None:
     """Register a snapshot pin on a resolved version dir; returns the
     pin-file path (pass to release_pin), or None when ``vdir`` is not
@@ -188,7 +202,7 @@ def pin_generation(vdir: str) -> str | None:
     import uuid
 
     vdir = vdir.rstrip("/")
-    if ".__v" not in os.path.basename(vdir):
+    if not is_version_dir(vdir):
         return None
     pins = os.path.join(os.path.dirname(vdir), ".__pins__")
     os.makedirs(pins, exist_ok=True)
@@ -378,7 +392,7 @@ def _read_partitioned(
     path: str,
     types: list[str],
     col: str = "type",
-    schema: str | None = None,
+    schema: str | StructType | None = None,
 ) -> DataFrame | None:
     """The live partition-by-type layout restricted to the given type
     values, or None if none of those partitions exist yet.
@@ -393,9 +407,10 @@ def _read_partitioned(
     B succeeds even when type A's files are corrupt.)
 
     Writer-owned stores know their own layout: pass ``schema`` (DDL
-    string, INCLUDING the partition column) to skip the per-read
-    schema-inference job — at one read per micro-batch those footer
-    jobs are a measurable slice of the steady-state wall (r9)."""
+    string or StructType, INCLUDING the partition column) to skip the
+    per-read schema-inference job — at one read per micro-batch those
+    footer jobs are a measurable slice of the steady-state wall (r9).
+    The streamed FTS tables pass their ``schema.LIVE_*_SCHEMA``."""
     import os
     from urllib.parse import unquote
 
@@ -487,7 +502,9 @@ def merge_batch_scoped(
     partition key.  Convergence-tested against the batch indexer."""
     base = index_path.rstrip("/")
     merged, _ = upsert_batch(
-        batch_df, type_tag, _read_partitioned(spark, base, [type_tag])
+        batch_df,
+        type_tag,
+        _read_partitioned(spark, base, [type_tag], schema=LIVE_INDEX_SCHEMA),
     )
     _publish_partitions(_stage_partitions(merged, base), base)
 
@@ -542,9 +559,12 @@ def delete_fts_docs(
     types = [r["type"] for r in keys.select("type").distinct().collect()]
     keys = F.broadcast(keys)
     stages = []
-    for live in (index_path, os.path.join(fts_path, "postings"),
-                 os.path.join(fts_path, "doc_lengths")):
-        old = _read_partitioned(spark, live, types)
+    for live, schema in (
+        (index_path, LIVE_INDEX_SCHEMA),
+        (os.path.join(fts_path, "postings"), LIVE_POSTINGS_SCHEMA),
+        (os.path.join(fts_path, "doc_lengths"), LIVE_DOC_LENGTHS_SCHEMA),
+    ):
+        old = _read_partitioned(spark, live, types, schema=schema)
         if old is not None:
             kept = old.join(keys, ["type", "key"], "left_anti")
             stages.append((_stage_partitions(kept, live), live))
@@ -583,7 +603,9 @@ def merge_fts_batch_scoped(
     base = index_path.rstrip("/")
     types = [type_tag]
     merged, batch_keys = upsert_batch(
-        batch_df, type_tag, _read_partitioned(spark, base, types)
+        batch_df,
+        type_tag,
+        _read_partitioned(spark, base, types, schema=LIVE_INDEX_SCHEMA),
     )
     # stage the merged index partitions FIRST: the postings delta below
     # reads this stable snapshot, and no live path changes until all
@@ -592,10 +614,10 @@ def merge_fts_batch_scoped(
     post_live = os.path.join(fts_path, "postings")
     len_live = os.path.join(fts_path, "doc_lengths")
     new_post, new_len = fts_delta(
-        spark.read.parquet(stage_idx),
+        spark.read.schema(LIVE_INDEX_SCHEMA).parquet(stage_idx),
         batch_keys,
-        _read_partitioned(spark, post_live, types),
-        _read_partitioned(spark, len_live, types),
+        _read_partitioned(spark, post_live, types, schema=LIVE_POSTINGS_SCHEMA),
+        _read_partitioned(spark, len_live, types, schema=LIVE_DOC_LENGTHS_SCHEMA),
         mode=mode,
         stem=stem,
     )

@@ -1,11 +1,11 @@
 """The package surface the serving benchmark (``perfbench/``) relies on.
 
 ``perfbench/run.py`` calls ``incremental_fts_stream(..., partitioned=True)``
-and ``perfbench/tracing.py`` (``--trace 1``) replaces the module attributes
-listed in its ``WRAPPED`` table plus ``FtsIndex.cached_phrase_hits``.  A
-refactor that renames or re-signs any of them breaks the benchmark; these
-checks make it fail here first.  ``perfbench/`` is only read: the import
-writes no bytecode into it.
+and ``server.make_live_server``, and ``perfbench/tracing.py``
+(``--trace 1``) replaces the module attributes listed in its ``WRAPPED``
+table plus ``FtsIndex.cached_phrase_hits``.  A refactor that renames or
+re-signs any of them breaks the benchmark; these checks make it fail here
+first.  ``perfbench/`` is only read: the import writes no bytecode into it.
 """
 
 import importlib
@@ -54,4 +54,14 @@ def test_incremental_fts_stream_takes_the_benchmark_call():
     inspect.signature(incremental_fts_stream).bind(
         None, None, "index", "fts", "db/t", "ckpt",
         partitioned=True, mode="portable", stem=False,
+    )
+
+
+def test_make_live_server_takes_the_benchmark_call():
+    from dogsheep_beta_spark.server import make_live_server
+
+    # perfbench/run.py's ingest_live call: (spark, index_path, fts_path,
+    # RULES, port=0, mode=..., stem=...)
+    inspect.signature(make_live_server).bind(
+        None, "index", "fts", {}, port=0, mode="portable", stem=False,
     )

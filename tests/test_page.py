@@ -876,9 +876,219 @@ def test_read_parts_rejects_unknown_partition_column(spark, tmpdir):
     d = os.path.join(str(tmpdir), "p")
     os.makedirs(d)
     spark.range(2).write.mode("overwrite").parquet(d)
+    file_schema = spark.range(0).schema  # the files' declared schema
     with pytest.raises(ValueError, match="not a known string-typed"):
-        srv._read_parts(spark, [(d, "shard=3")])
+        srv._read_parts(spark, [(d, "shard=3")], file_schema)
     # the known string layout still reads, with the column re-injected
-    df = srv._read_parts(spark, [(d, "type=docs")])
+    df = srv._read_parts(spark, [(d, "type=docs")], file_schema)
     assert df.schema["type"].dataType.simpleString() == "string"
     assert {r["type"] for r in df.collect()} == {"docs"}
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _live_merge(spark, index_path, fts_path, rows, type_tag):
+    from dogsheep_beta_spark.streaming.incremental import merge_fts_batch_scoped
+
+    merge_fts_batch_scoped(
+        spark,
+        spark.createDataFrame(rows, "key int, title string, search_1 string"),
+        0, index_path, fts_path, type_tag,
+    )
+
+
+def _acquire(spark, index_path, fts_path):
+    """One live snapshot: (Spark jobs load_live_snapshot started,
+    (n_docs, avgdl) it reports, (n_docs, avgdl) of a full recount over
+    the same snapshot)."""
+    from pyspark.sql import functions as F
+
+    from dogsheep_beta_spark.server import load_live_snapshot, release_snapshot
+
+    start = _next_job_id(spark)
+    index_df, fts = load_live_snapshot(spark, index_path, fts_path)
+    jobs = _next_job_id(spark) - start
+    try:
+        n = index_df.where(F.col("key").isNotNull()).count()
+        total = fts.doc_lengths.agg(F.sum("dl")).collect()[0][0] or 0
+        return jobs, (fts.n_docs, fts.avgdl), (n, (total / n) if n else 0.0)
+    finally:
+        release_snapshot(fts)
+
+
+def test_live_acquire_jobs_and_exact_scalars(spark, tmp_path, monkeypatch):
+    """Acquire job guard: schema-pinned reads start no inference job and
+    the BM25 scalars are memoized per partition version, so a snapshot
+    of an unchanged generation starts 0 Spark jobs and one after a
+    one-type publish starts one aggregate (≤ 2 jobs: AQE's map stage +
+    the result stage).  The summed scalars must stay exactly a full
+    recount through merges, an update and a delete — with a NULL-key
+    row (outside the FTS doc universe) and a zero-token doc (dl 0, still
+    counted) in the corpus."""
+    from collections import OrderedDict
+
+    from dogsheep_beta_spark import server
+    from dogsheep_beta_spark.streaming.incremental import delete_fts_docs
+
+    monkeypatch.setattr(server, "_SCALAR_MEMO", OrderedDict())
+    index_path, fts_path = str(tmp_path / "index"), str(tmp_path / "fts")
+    _live_merge(spark, index_path, fts_path, [
+        (1, "alpha beta", "gamma"), (2, None, None), (None, "orphan", "row"),
+    ], "a.db/t")
+    _live_merge(spark, index_path, fts_path, [(10, "zeta", "omega")], "b.db/t")
+
+    _, scalars, recount = _acquire(spark, index_path, fts_path)
+    assert scalars == recount == (3, 5 / 3)
+    jobs, scalars, recount = _acquire(spark, index_path, fts_path)
+    assert jobs == 0  # unchanged generation: every share is memoized
+    assert scalars == recount
+
+    # an update (key 1 loses two tokens) and a new doc, into one type
+    _live_merge(spark, index_path, fts_path, [
+        (1, "alpha", None), (3, "delta epsilon", "x"),
+    ], "a.db/t")
+    jobs, scalars, recount = _acquire(spark, index_path, fts_path)
+    assert jobs <= 2
+    assert scalars == recount == (4, 6 / 4)
+
+    delete_fts_docs(
+        spark,
+        spark.createDataFrame([("b.db/t", "10")], "type string, key string"),
+        index_path, fts_path,
+    )
+    _, scalars, recount = _acquire(spark, index_path, fts_path)
+    assert scalars == recount == (3, 4 / 3)
+    assert _acquire(spark, index_path, fts_path)[0] == 0
+
+
+def test_scalar_memo_is_a_bounded_lru(spark, tmp_path, monkeypatch):
+    """The per-partition scalar memo grows with publishes, so it is
+    bounded; it is an LRU, so a hot partition that no publish touches
+    (type a) outlives another type's publish churn, which a
+    first-in-first-out bound would evict.  Scalars stay exact."""
+    from collections import OrderedDict
+
+    from dogsheep_beta_spark import server
+
+    monkeypatch.setattr(server, "_SCALAR_MEMO", OrderedDict())
+    monkeypatch.setattr(server, "_SCALAR_MEMO_MAX", 4)
+    index_path, fts_path = str(tmp_path / "index"), str(tmp_path / "fts")
+    len_path = str(tmp_path / "fts" / "doc_lengths")
+    _live_merge(spark, index_path, fts_path, [(1, "hot doc", None)], "a.db/t")
+    hot = None
+    for i in range(3):  # 6 new b partition versions against a cap of 4
+        _live_merge(
+            spark, index_path, fts_path, [(10 + i, "churn " * (i + 1), None)],
+            "b.db/t",
+        )
+        _, scalars, recount = _acquire(spark, index_path, fts_path)
+        assert scalars == recount
+        assert len(server._SCALAR_MEMO) <= 4
+        now = {
+            vdir
+            for p in (index_path, len_path)
+            for vdir, e in server._resolve_parts(p)
+            if e.startswith("type=a")
+        }
+        assert hot is None or now == hot  # type a was never republished
+        hot = now
+    assert scalars == (4, (2 + 1 + 2 + 3) / 4)
+    assert len(hot) == 2 and hot <= set(server._SCALAR_MEMO)
+
+
+def test_scalar_memo_under_concurrent_snapshots(spark, tmp_path, monkeypatch):
+    """ThreadingHTTPServer handlers share the memo.  With a cap below one
+    snapshot's four partition versions, concurrent snapshots keep
+    evicting and recounting each other's entries; each must still
+    report the exact scalars, and the memo must end within its bound."""
+    import sys
+    import threading
+    from collections import OrderedDict
+
+    from dogsheep_beta_spark import server
+
+    monkeypatch.setattr(server, "_SCALAR_MEMO", OrderedDict())
+    monkeypatch.setattr(server, "_SCALAR_MEMO_MAX", 2)
+    index_path, fts_path = str(tmp_path / "index"), str(tmp_path / "fts")
+    _live_merge(spark, index_path, fts_path, [
+        (1, "alpha beta", None), (2, "gamma", None),
+    ], "a.db/t")
+    _live_merge(spark, index_path, fts_path, [(3, "delta epsilon zeta", None)], "b.db/t")
+    results, errors = [], []
+
+    def snapshots():
+        try:
+            for _ in range(3):
+                _, fts = server.load_live_snapshot(spark, index_path, fts_path)
+                results.append((fts.n_docs, fts.avgdl))
+                server.release_snapshot(fts)
+        except Exception as e:  # noqa: BLE001
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=snapshots) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not errors, errors
+    assert len(results) == 24 and set(results) == {(3, 6 / 3)}
+    assert len(server._SCALAR_MEMO) <= 2
+
+
+@pytest.mark.parametrize("emptied_by", ["missing", "delete"])
+def test_live_server_serves_an_empty_layout(spark, tmp_path, emptied_by):
+    """A streamed layout with no type= partition — before the first
+    batch, or after a delete retired every partition — is an empty
+    corpus: a normal HTTP 200 "Got 0 results" page with n_docs 0 and
+    avgdl 0.0, not a schema-inference 500."""
+    import threading
+    import urllib.request
+
+    from dogsheep_beta_spark.server import make_live_server
+    from dogsheep_beta_spark.streaming.incremental import delete_fts_docs
+
+    index_path, fts_path = str(tmp_path / "index"), str(tmp_path / "fts")
+    if emptied_by == "delete":
+        _live_merge(spark, index_path, fts_path, [(1, "needle", None)], "a.db/t")
+        delete_fts_docs(
+            spark,
+            spark.createDataFrame([("a.db/t", "1")], "type string, key string"),
+            index_path, fts_path,
+        )
+    jobs, scalars, recount = _acquire(spark, index_path, fts_path)
+    assert jobs == 0
+    assert scalars == recount == (0, 0.0)
+
+    srv = make_live_server(spark, index_path, fts_path, port=0)
+    host, port = srv.server_address[:2]
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        for query in ("?q=needle", ""):
+            with urllib.request.urlopen(
+                f"http://{host}:{port}/-/beta{query}", timeout=120
+            ) as resp:
+                assert resp.status == 200
+                assert "Got 0 results" in resp.read().decode("utf-8")
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
+def test_resolve_parts_rejects_an_unpartitioned_dir(tmp_path):
+    """A dir of parquet files with no type= partition (a batch-written
+    index) is not a streamed layout: the live server must refuse it
+    rather than serve it as an empty corpus."""
+    from dogsheep_beta_spark.server import _resolve_parts
+
+    (tmp_path / "part-00000.parquet").write_bytes(b"")
+    with pytest.raises(ValueError, match="no type= partition"):
+        _resolve_parts(str(tmp_path))
+    assert _resolve_parts(str(tmp_path / "missing")) == []

@@ -400,6 +400,49 @@ def _two_type_fts(spark, tmpdir):
     return index_path, fts_path, tables
 
 
+def _spark_type_name(t) -> str:
+    """pyarrow footer type → Spark simpleString (the types the streamed
+    tables use; anything else fails the lookup loudly)."""
+    import pyarrow as pa
+
+    if pa.types.is_list(t):
+        return f"array<{_spark_type_name(t.value_type)}>"
+    return {pa.string(): "string", pa.int64(): "bigint", pa.int32(): "int"}[t]
+
+
+def test_streamed_footers_match_declared_schemas(spark, tmpdir):
+    """Live reads of the streamed tables are schema-pinned
+    (schema.LIVE_*_FILE_SCHEMA), so writer/reader drift must fail here:
+    every parquet footer merge_fts_batch_scoped writes has exactly the
+    declared column names and types — a column added to ``conform`` or
+    ``postings_and_lengths`` would otherwise read as nothing at all."""
+    import pyarrow.parquet as pq
+
+    from dogsheep_beta_spark.schema import (
+        LIVE_DOC_LENGTHS_FILE_SCHEMA,
+        LIVE_INDEX_FILE_SCHEMA,
+        LIVE_POSTINGS_FILE_SCHEMA,
+    )
+
+    _, _, tables = _two_type_fts(spark, tmpdir)
+    declared = (
+        LIVE_INDEX_FILE_SCHEMA,
+        LIVE_POSTINGS_FILE_SCHEMA,
+        LIVE_DOC_LENGTHS_FILE_SCHEMA,
+    )
+    for table, file_schema in zip(tables, declared):
+        want = [(f.name, f.dataType.simpleString()) for f in file_schema]
+        files = []
+        for root, dirs, names in os.walk(table, followlinks=True):
+            # the live type= links only, not retained hidden versions
+            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+            files += [os.path.join(root, f) for f in names if f.endswith(".parquet")]
+        assert files, table
+        for f in files:
+            got = [(c.name, _spark_type_name(c.type)) for c in pq.read_schema(f)]
+            assert got == want, f
+
+
 def test_delete_every_doc_of_a_type_retires_its_partitions(spark, tmpdir):
     """Tombstoning every doc of one type leaves no rows of that type in
     any of the three tables, and no ``type=`` partition for it (an
